@@ -97,12 +97,13 @@ def platt_scaling(df: DataFrame, score_col: str, label_col: str,
                     "s", F.lit(0.0).alias("y"),
                     (F.col("_n") - F.col("_pos")).cast("double").alias("w")))
                 .filter(F.col("w") > 0))
-    from orange3_spark.ml.learners import right_size_for_fit
+    from orange3_spark.session import right_size
 
     va = VectorAssembler(inputCols=["s"], outputCol="features")
     lr = LogisticRegression(featuresCol="features", labelCol="y",
                             weightCol="w", maxIter=max_iter)
-    train = right_size_for_fit(va.transform(train))
+    train = va.transform(train)
+    train = right_size(train, train.count(), rows_per_task=20_000).cache()
     try:
         fit = lr.fit(train)
     finally:

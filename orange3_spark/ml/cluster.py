@@ -11,10 +11,12 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from orange3_spark.ml.learners import assemble_features
+from orange3_spark.session import right_size
 
 
 def kmeans(df: DataFrame, features: Sequence[str] = (), *,
@@ -98,32 +100,24 @@ def exact_sq_dists(X, C):
     return out
 
 
-def rightsize_persist(qdf: DataFrame, *, rows_per_task: int = 50_000,
-                      n_rows: "int | None" = None):
-    """Shared fit-scaffold for the Lloyd family (k-means, PQ): count the
-    input, coalesce a small frame so per-round jobs don't pay pure
-    scheduler overhead on near-empty tasks (full parallelism returns
-    automatically at real row counts), and persist MEMORY_AND_DISK so an
-    over-memory fit spills instead of recomputing.  Returns
-    ``(persisted_df, n_rows)``.  Pass ``n_rows`` when the caller already
-    knows the count (the bounded-probe fast path) to skip the count job;
-    the persist then materializes lazily on first downstream action."""
-    from pyspark import StorageLevel
-
-    if n_rows is None:
-        n_rows = qdf.count()
-    target = max(1, min(qdf.sparkSession.sparkContext.defaultParallelism,
-                        n_rows // rows_per_task))
-    if target < qdf.rdd.getNumPartitions():
-        qdf = qdf.coalesce(target)
-    return qdf.persist(StorageLevel.MEMORY_AND_DISK), n_rows
-
-
 #: bounded-frame cap for the Lloyd local twin (n_rows·dim cells and a
 #: row cap for the probe's limit) — the r10 rounds' shared 4M-cell size
 #: class (fit_logistic_irls / som_fit / cv_logreg twins)
 LLOYD_LOCAL_CELLS = 4_000_000
 LLOYD_LOCAL_ROWS = 65_536
+
+
+def lloyd_probe(frame: DataFrame, q_col: str = "_q"):
+    """The Lloyd family's bounded probe (k-means, silhouette, PQ): ONE
+    ``limit(LLOYD_LOCAL_ROWS + 1)`` collect of ``frame``.  Returns the
+    rows when the frame is non-empty and within both caps (rows, and
+    rows × ``q_col`` length cells) — the caller's local twin runs on
+    them — else ``None``, and the caller takes its distributed path."""
+    rows = frame.limit(LLOYD_LOCAL_ROWS + 1).collect()
+    if (rows and len(rows) <= LLOYD_LOCAL_ROWS
+            and len(rows) * len(rows[0][q_col]) <= LLOYD_LOCAL_CELLS):
+        return rows
+    return None
 
 
 def _lloyd_local_rounds(prows, id_col: str, k: int, n_iter: int):
@@ -284,20 +278,19 @@ def kmeans_lloyd_fit(df: DataFrame, id_col: str, *, array_col: str,
     # below) and the final distributed assignment is unchanged.  Past
     # the cap the probe rows are discarded and the job-per-round loop
     # runs as before (a 100 TB fit frame takes that path).
-    prows = (qdf.select(id_col, "_q")
-             .limit(LLOYD_LOCAL_ROWS + 1).collect())
-    local = (len(prows) <= LLOYD_LOCAL_ROWS
-             and len(prows) >= 1
-             and len(prows) * len(prows[0]["_q"]) <= LLOYD_LOCAL_CELLS)
+    prows = lloyd_probe(qdf.select(id_col, "_q"))
+    local = prows is not None
+    # The distributed fit scans qdf n_iter+1 times (assign per round +
+    # the final one); cache so parquet read + quantization run once,
+    # MEMORY_AND_DISK so an over-memory fit spills instead of
+    # recomputing.  On the local path the persist materializes lazily at
+    # the final assignment.
+    qdf = right_size(qdf, len(prows) if local else qdf.count()).persist(
+        StorageLevel.MEMORY_AND_DISK)
     if local:
-        qdf, _ = rightsize_persist(qdf, n_rows=len(prows))
         centroids = _lloyd_local_rounds(prows, id_col, k, n_iter)
         dim = len(centroids[0])
     else:
-        # The fit scans qdf n_iter+1 times (assign per round + the
-        # final one); cache so parquet read + quantization run once
-        # (rightsize_persist holds the why of coalesce + storage level)
-        qdf, _ = rightsize_persist(qdf)
         centroids = [[int(x) for x in r["_q"]]
                      for r in qdf.select(id_col, "_q")
                      .orderBy(id_col).take(k)]
@@ -542,10 +535,8 @@ def silhouette_exact(assigned: DataFrame, *, q_col: str = "_q",
     # computation is bit-identical to the batched mapInPandas path
     # under any partitioning; past the cap the distributed path runs
     # unchanged.
-    prows = (assigned.select(q_col, cluster_col)
-             .limit(LLOYD_LOCAL_ROWS + 1).collect())
-    if (prows and len(prows) <= LLOYD_LOCAL_ROWS
-            and len(prows) * len(prows[0][q_col]) <= LLOYD_LOCAL_CELLS):
+    prows = lloyd_probe(assigned.select(q_col, cluster_col), q_col)
+    if prows is not None:
         return _silhouette_local(prows, q_col, cluster_col)
 
     dim = len(assigned.select(q_col).first()[0])
@@ -655,25 +646,6 @@ def adjusted_rand_index(assigned: DataFrame, cluster_col: str = "cluster",
     if maximum == expected:
         return 1.0    # degenerate: single cluster == single class
     return (float(sum_comb) - expected) / (maximum - expected)
-
-
-def evaluate_clustering(df: DataFrame, id_col: str, *, array_col: str,
-                        label_col: str = "label", k: int = 8,
-                        n_iter: int = 2) -> dict:
-    """Clustering evaluation harness (ClusteringEvaluation,
-    ``Orange/evaluation/clustering.py:24-85``): fit the deterministic
-    Lloyd k-means and score it by silhouette AND ARI against the given
-    labels — the two scores the reference reports per fold.  Releases
-    the fit cache before returning (scores are scalars)."""
-    assigned, _ = kmeans_lloyd_fit(df, id_col, array_col=array_col,
-                                   k=k, n_iter=n_iter)
-    scores = {
-        "k": k,
-        "silhouette": silhouette_exact(assigned),
-        "ari": adjusted_rand_index(assigned, "cluster", label_col),
-    }
-    assigned.lloyd_cache.unpersist()
-    return scores
 
 
 def dbscan(df: DataFrame, id_col: str, features: Sequence[str], *,

@@ -244,13 +244,14 @@ def heatmap_order(df: DataFrame, id_col: str, cols: Sequence[str], *,
     pairs = row_distances(df, id_col, cols, metric=metric,
                           normalize=normalize)
     if olo:
-        # guard BEFORE collecting (same contract as linkage_from_pairs)
+        # bounded fetch: at most cap + 1 pairs reach the driver, and an
+        # over-cap frame raises (same contract as linkage_from_pairs)
         cap = OLO_MAX_POINTS * (OLO_MAX_POINTS - 1) // 2
-        if pairs.limit(cap + 1).count() > cap:
+        rows = pairs.limit(cap + 1).collect()
+        if len(rows) > cap:
             raise ValueError(f"pair frame implies more than "
                              f"OLO_MAX_POINTS={OLO_MAX_POINTS} points; "
                              "seriate a cluster summary instead")
-        rows = pairs.collect()
         ids = sorted({r[0] for r in rows} | {r[1] for r in rows})
         pos = {v: i for i, v in enumerate(ids)}
         D = np.zeros((len(ids), len(ids)))

@@ -21,6 +21,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import right_size, spread
+
 
 def assemble_features(df: DataFrame, features: Sequence[str],
                       out: str = "features",
@@ -111,26 +113,12 @@ def ols_learner(df: DataFrame, features: Sequence[str],
 
 # ----------------------------------------------------------- MLlib estimators
 
-def right_size_for_fit(train: DataFrame, *,
-                       rows_per_task: int = 20_000) -> DataFrame:
-    """Iterative MLlib fits run one treeAggregate job per iteration over
-    EVERY partition, so a small training set on a wide session pays
-    iterations×parallelism near-empty task round-trips.  Coalesce to
-    ceil(n/rows_per_task) partitions (capped at default parallelism):
-    full parallelism at scale, one task at bench SF.  Caller unpersists."""
-    sc = train.sparkSession.sparkContext
-    n = train.count()
-    parts = max(1, min(sc.defaultParallelism, n // rows_per_task + 1))
-    if parts < train.rdd.getNumPartitions():
-        train = train.coalesce(parts)
-    return train.cache()
-
-
 def _mllib_learner(estimator_cls, task: str, df: DataFrame,
                    features: Sequence[str], target_col: str,
                    array_col: Optional[str] = None, **params) -> Model:
-    train = right_size_for_fit(assemble_features(df, features,
-                                                 array_col=array_col))
+    # MLlib runs one treeAggregate job per iteration over every partition
+    train = assemble_features(df, features, array_col=array_col)
+    train = right_size(train, train.count(), rows_per_task=20_000).cache()
     est = estimator_cls(featuresCol="features", labelCol=target_col,
                         predictionCol="prediction", **params)
     try:
@@ -269,22 +257,18 @@ def logistic_irls(df: DataFrame, features: Sequence[str],
             iters=iters, qscale=qscale, ridge=ridge)
     del pdf_all
     sel = sel.persist()
-    # Right-size the iteration frame (same coalesce rule as som_fit /
-    # right_size_for_fit): a bounded fit frame arriving through a
-    # 32-partition shuffle pays iterations×parallelism Python-worker
-    # round-trips — measured 6 IRLS iterations over 2,492 cached rows in
-    # 32 partitions at ~1 s/iteration while the row stats cost 0.04 s.
-    # One task per 50k rows keeps full parallelism at scale; the exact
-    # integer combine is partition-independent, so β is unchanged
-    # (pinned by test_logistic_irls_partition_independent).
-    n_rows = sel.count()
-    sc = df.sparkSession.sparkContext
-    parts = max(1, min(sc.defaultParallelism, n_rows // 50_000 + 1))
-    if parts < sel.rdd.getNumPartitions():
-        wide = sel
-        sel = wide.coalesce(parts).persist()
-        sel.count()
-        wide.unpersist()
+    # Right-size the iteration frame (session.right_size): a bounded fit
+    # frame arriving through a 32-partition shuffle pays
+    # iterations×parallelism Python-worker round-trips — measured 6 IRLS
+    # iterations over 2,492 cached rows in 32 partitions at ~1
+    # s/iteration while the row stats cost 0.04 s.  The exact integer
+    # combine is partition-independent, so β is unchanged (pinned by
+    # test_logistic_irls_partition_independent).
+    narrow = right_size(sel, sel.count())
+    if narrow is not sel:
+        narrow.persist().count()
+        sel.unpersist()
+        sel = narrow
     try:
         beta = np.zeros(d)
 
@@ -628,9 +612,7 @@ def knn_regressor(df: DataFrame, features: Sequence[str] = (),
         # the O(n_test·n_train) distance work happens inside mapInPandas —
         # a filter-derived test set often sits in 1-2 input splits, which
         # would serialize it; spread the probe rows across the executors
-        par = d.sparkSession.sparkContext.defaultParallelism
-        if d.rdd.getNumPartitions() < par:
-            d = d.repartition(par)
+        d = spread(d)
 
         def run(pdf_iter):
             X, y, ids = b.value

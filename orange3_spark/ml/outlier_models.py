@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import spread
+
 #: fixed-point scale for isolation-forest path lengths (1 step = 1e6)
 DSCALE = 1_000_000
 
@@ -86,26 +88,6 @@ def _scores_udf_col(cols: Sequence[str], array_col: Optional[str],
         return pd.Series(scores_np(X))
 
     return _g(_features_col(cols, array_col))
-
-
-def _spread_for_scoring(df: DataFrame) -> DataFrame:
-    """Heavy per-row Python scoring over a small-file scan otherwise runs
-    in ONE task: the bench fixtures are single-row-group parquet, the
-    'unsplittable input' case of the optimization guide (§2.5) — and a
-    600k-row RFF/tree scoring pass was measured single-threaded on a
-    32-core session.  Round-robin repartition to the default parallelism
-    ONLY when the input has fewer partitions (at scale a real scan
-    already has ≥ cores partitions and no exchange is added).  Scoring
-    is row-local and batch-size-independent, so results are identical
-    under any partitioning."""
-    sc = df.sparkSession.sparkContext
-    try:
-        parts = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    if parts < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
-    return df
 
 
 def _id_hash_key(id_cols: Sequence[str]):
@@ -266,7 +248,7 @@ class IsolationForestModel:
                 contamination: float = 0.1) -> DataFrame:
         qthr = self.qthreshold(contamination)
         norm = DSCALE * len(self.trees) * _avg_path_length(self.psi)
-        out = _spread_for_scoring(df).withColumn(
+        out = spread(df).withColumn(
             qdepth_col, _scores_udf_col(self.cols, self.array_col,
                                         self._qdepths_np, "long"))
         out = out.withColumn(
@@ -421,7 +403,7 @@ class OneClassSVMModel:
 
     def predict(self, df: DataFrame, *, score_col: str = "svm_score",
                 flag_col: str = "is_outlier") -> DataFrame:
-        out = _spread_for_scoring(df).withColumn(
+        out = spread(df).withColumn(
             score_col, _scores_udf_col(self.cols, None, self._scores_np))
         return out.withColumn(flag_col, F.col(score_col) < 0)
 

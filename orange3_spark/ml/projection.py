@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import right_size
+
 MAX_MDS_POINTS = 20_000
 
 
@@ -645,17 +647,11 @@ def som_fit(df: DataFrame, cols: Sequence[str] = (), *,
         X = np.array([r["_arr"] for r in rows], dtype=np.float64)
         return fit_som_matrix(X, dim_x=dim_x, dim_y=dim_y,
                               n_iterations=n_iterations, sigma=sigma)
-    # each iteration is one scan; right-size partitions so a small fit
-    # isn't n_iterations×parallelism scheduler round-trips, while big data
-    # keeps full parallelism
-    parts = max(1, min(df.sparkSession.sparkContext.defaultParallelism,
-                       n // 50_000 + 1))
-    if parts < pre.rdd.getNumPartitions():
-        data = pre.coalesce(parts).cache()
-        data.count()
+    # each iteration is one scan (session.right_size holds the why)
+    data = right_size(pre, n)
+    if data is not pre:
+        data.cache().count()
         pre.unpersist()  # coalesced cache is live; drop the wide one
-    else:
-        data = pre
 
     try:
         def _stack(series: pd.Series) -> "np.ndarray":

@@ -87,10 +87,10 @@ class SVRModel:
                 if wi:
                     expr = expr + F.col(c).cast("double") * F.lit(float(wi))
             return df.withColumn(pred_col, expr)
-        from orange3_spark.ml.outlier_models import (_scores_udf_col,
-                                                     _spread_for_scoring)
+        from orange3_spark.ml.outlier_models import _scores_udf_col
+        from orange3_spark.session import spread
 
-        return _spread_for_scoring(df).withColumn(
+        return spread(df).withColumn(
             pred_col, _scores_udf_col(self.cols, self.array_col,
                                       self._predict_np,
                                       width=self.W.shape[0]))

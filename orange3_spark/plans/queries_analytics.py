@@ -6,19 +6,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from orange3_spark.plans import oracle_replay as OR3
-from orange3_spark.plans.registry import query
-from orange3_spark.session import load_tables
+from orange3_spark.plans.registry import fixtures, query
 from orange3_spark.stats import distance as D
 from orange3_spark.stats import outliers as O
 
 
-def _t(spark, sf_dir, *names):
-    d = load_tables(spark, sf_dir, names)
-    return [d[n] for n in names]
-
-
 def _nation_features(spark, sf_dir):
-    nation, customer, orders = _t(spark, sf_dir, "nation", "customer", "orders")
+    nation, customer, orders = fixtures(spark, sf_dir, "nation", "customer", "orders")
     return (orders.join(customer, orders.o_custkey == customer.c_custkey)
                   .join(nation, customer.c_nationkey == nation.n_nationkey)
                   .groupBy("n_nationkey")
@@ -61,7 +55,7 @@ SELECT 'l_discount', 'l_tax', sqrt(sum(power(l_discount - l_tax, 2))) FROM linei
 def q_distance_columns(spark, sf_dir):
     """Distances BETWEEN columns in one aggregation pass — the reference
     transposes the matrix first; at scale the transpose never exists."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     return D.column_distances(li, ["l_quantity", "l_discount", "l_tax"],
                               metric="euclidean")
 
@@ -80,7 +74,7 @@ FROM lineitem GROUP BY l_returnflag
 def q_boxplot(spark, sf_dir):
     """Box-plot statistics per group (owboxplot.py): exact interpolated
     quartiles + mean±sd in one grouped aggregation."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     p = lambda q: F.percentile("l_extendedprice", F.lit(q))
     return (li.groupBy("l_returnflag")
               .agg(F.min("l_extendedprice").alias("lo"),
@@ -110,7 +104,7 @@ def q_sieve_chi2(spark, sf_dir):
     and per-cell χ² contributions — contingency + window marginals."""
     from pyspark.sql.window import Window
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     c = (li.groupBy(F.col("l_returnflag"), F.col("l_linestatus"))
            .agg(F.count(F.lit(1)).alias("observed")))
     wr = Window.partitionBy("l_returnflag")
@@ -135,7 +129,7 @@ WHERE value < q.q1 - 1.5 * (q.q3 - q.q1)
 def q_outlier_iqr(spark, sf_dir):
     """Tukey-fence outliers (owoutliers.py's rule-based cousin): one exact
     quantile pass + a row-local predicate."""
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = fixtures(spark, sf_dir, "events")
     flagged = O.iqr_outliers(events, "value")
     return flagged.filter("is_outlier").select("event_id", "value")
 
@@ -178,7 +172,7 @@ def q_maha_outliers(spark, sf_dir):
     decimals."""
     from orange3_spark.stats.distance import _standardize
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     cols = ["l_quantity", "l_extendedprice", "l_discount"]
     z = _standardize(li.select("l_orderkey", "l_linenumber", *cols), cols)
     scored = O.mahalanobis_score(z, cols)
@@ -206,7 +200,8 @@ def q3_shipping_priority(spark, sf_dir):
     """TPC-H Q3 shape: selective dim filter → two joins → grouped revenue →
     top-10.  Both date filters push into the parquet scans; the customer
     side broadcasts."""
-    customer, orders, li = _t(spark, sf_dir, "customer", "orders", "lineitem")
+    customer, orders, li = fixtures(spark, sf_dir,
+                                    "customer", "orders", "lineitem")
     cut = "1995-03-15"
     return (customer.filter(F.col("c_mktsegment") == "BUILDING")
             .join(orders, customer.c_custkey == orders.o_custkey)
@@ -237,7 +232,7 @@ WHERE l_shipdate >= TIMESTAMP '1995-01-01'
 def q6_forecast_revenue(spark, sf_dir):
     """TPC-H Q6 shape: pure scan-filter-aggregate — every predicate reaches
     the parquet reader, the aggregation is one map-side-combined pass."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     return (li.filter((F.col("l_shipdate") >= "1995-01-01")
                       & (F.col("l_shipdate") < "1996-01-01")
                       & F.col("l_discount").between(0.02, 0.04)
@@ -263,7 +258,7 @@ LIMIT 20
 """)
 def q10_returned_items(spark, sf_dir):
     """TPC-H Q10 shape: fact-to-dims star join + top-k by grouped revenue."""
-    customer, orders, li, nation = _t(
+    customer, orders, li, nation = fixtures(
         spark, sf_dir, "customer", "orders", "lineitem", "nation")
     return (orders.filter((F.col("o_orderdate") >= "1995-01-01")
                           & (F.col("o_orderdate") < "1995-04-01"))
@@ -289,14 +284,14 @@ FROM orders GROUP BY 1
 def q_time_bins(spark, sf_dir):
     """Time binning (time_binnings, discretize.py:523-566): calendar-unit
     bins via date_trunc — pushdown-friendly, no UDF."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     return (orders.groupBy(F.date_trunc("month", "o_orderdate").alias("month"))
                   .agg(F.count(F.lit(1)).alias("n"),
                        F.sum("o_totalprice").alias("total")))
 
 
 def _nation_features4(spark, sf_dir):
-    nation, customer, orders = _t(spark, sf_dir, "nation", "customer", "orders")
+    nation, customer, orders = fixtures(spark, sf_dir, "nation", "customer", "orders")
     return (orders.join(customer, orders.o_custkey == customer.c_custkey)
                   .join(nation, customer.c_nationkey == nation.n_nationkey)
                   .groupBy("n_nationkey")
@@ -329,7 +324,7 @@ FROM part WHERE p_partkey <= 15"""
 _SUPP_COLS = ["f_key", "f_bal", "f_nat", "f_len"]
 
 def _supp_features(spark, sf_dir):
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = fixtures(spark, sf_dir, "part")
     return (part.filter(F.col("p_partkey") <= 15)
             .select("p_partkey",
                     F.col("p_partkey").cast("double").alias("f_key"),
@@ -501,7 +496,7 @@ def q_distance_spearman_cols(spark, sf_dir):
     HUGEINT in the oracle), so both engines reach the one mirrored
     sqrt+divide with identical integers — same bit-identical-IEEE argument
     as q_distance_spearman_rows, at any partition count."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     return D.spearman_column_distances(
         li, ["l_quantity", "l_discount", "l_tax"])
 
@@ -528,7 +523,7 @@ def q_outlier_lof(spark, sf_dir):
     """Local Outlier Factor over part (size, price), k=5 — the reference's
     sklearn-wrapped LOF re-derived as joins + windows + grouped aggregates,
     exact and oracle-checked end to end."""
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = fixtures(spark, sf_dir, "part")
     pts = part.filter(F.col("p_partkey") <= 500).select(
         "p_partkey", F.col("p_size").cast("double").alias("x"),
         F.col("p_retailprice").alias("y"))
@@ -586,7 +581,7 @@ def q_pagerank(spark, sf_dir):
     integers with a node-id tiebreak."""
     from orange3_spark.operators.graph import pagerank_topk
 
-    orders, li = _t(spark, sf_dir, "orders", "lineitem")
+    orders, li = fixtures(spark, sf_dir, "orders", "lineitem")
     e0 = (orders.join(li, orders.o_orderkey == li.l_orderkey)
           .select("o_custkey", "l_suppkey").distinct())
     # both directions via ONE explode over the distinct pair set — a
@@ -636,7 +631,7 @@ def q_drift_chi2(spark, sf_dir):
     per-batch alarm for categorical schema/mix shift."""
     from orange3_spark.stats.validation import drift_chi2
 
-    (ev,) = _t(spark, sf_dir, "events")
+    (ev,) = fixtures(spark, sf_dir, "events")
     tab, chi2_q = drift_chi2(
         ev, "event_type",
         F.col("ts") < F.lit("2024-01-15 00:00:00").cast("timestamp"))

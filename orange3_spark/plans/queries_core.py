@@ -19,14 +19,9 @@ from orange3_spark.operators.filters import (
     IsDefined, StringOps, Values,
 )
 from orange3_spark.operators.merge import anti_join, merge, semi_join
-from orange3_spark.plans.registry import query
+from orange3_spark.plans.registry import fixtures, query
 from orange3_spark.session import load_tables
 from orange3_spark.stats import basic as S
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    d = load_tables(spark, sf_dir, names)
-    return [d[n] for n in names]
 
 
 # ------------------------------------------------------------------ flagship
@@ -48,7 +43,7 @@ GROUP BY l_returnflag, l_linestatus
 def q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q1-shaped: FilterContinuous + groupby/aggregate — the
     reference's filter.py + aggregate.py vocabulary (SURVEY §7 step 2)."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     li = FilterContinuous("l_shipdate", ContinuousOps.LESS_EQUAL, "1998-09-02")(li)
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     out = G.aggregate(
@@ -80,7 +75,7 @@ WHERE ((l_quantity BETWEEN 10 AND 20) OR (l_discount > 0.07))
 def q_filter_values_tree(spark, sf_dir):
     """Values boolean tree (filter.py:200-244) with Orange's NULL-matching
     NotEqual (sql/filter.py:53)."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     cond = Values(conditions=[
         Values(conditions=[
             FilterContinuous("l_quantity", ContinuousOps.BETWEEN, 10, max=20),
@@ -102,7 +97,7 @@ WHERE (contains(p_name, 'widget') OR p_name LIKE 'small%')
 def q_filter_string(spark, sf_dir):
     """FilterString contains/startswith + FilterStringList (case-insensitive)
     + FilterRegex (filter.py:400-554)."""
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = fixtures(spark, sf_dir, "part")
     cond = Values(conditions=[
         Values(conditions=[
             FilterString("p_name", StringOps.CONTAINS, "widget"),
@@ -120,7 +115,7 @@ FROM lineitem
 WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL AND l_tax IS NOT NULL
 """)
 def q_filter_isdefined(spark, sf_dir):
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     out = IsDefined(["l_quantity", "l_discount", "l_tax"])(li)
     return out.agg(F.count(F.lit(1)).alias("n_defined"))
 
@@ -134,7 +129,7 @@ FROM orders JOIN customer ON o_custkey = c_custkey
 def q_join_inner(spark, sf_dir):
     """Merge Data 'Find matching pairs' (owmergedata.py inner) — dim side
     broadcast so the fact table is never shuffled."""
-    orders, customer = _t(spark, sf_dir, "orders", "customer")
+    orders, customer = fixtures(spark, sf_dir, "orders", "customer")
     j = merge(orders, customer, ["o_custkey"], ["c_custkey"], how="inner",
               check_unique=False, broadcast_right=True)
     return j.select("o_orderkey", "o_totalprice", "o_orderstatus",
@@ -152,7 +147,7 @@ LEFT JOIN (
 def q_join_left_agg(spark, sf_dir):
     """Merge Data 'Append columns' (left outer) with right-side uniqueness
     check (owmergedata.py:453-497)."""
-    orders, customer = _t(spark, sf_dir, "orders", "customer")
+    orders, customer = fixtures(spark, sf_dir, "orders", "customer")
     per_cust = G.aggregate(orders, ["o_custkey"], {
         "o_orderkey": [("count", "n_orders")],
         "o_totalprice": [("sum", "total_spent")],
@@ -176,7 +171,7 @@ GROUP BY n_name
 def q5_region_revenue(spark, sf_dir):
     """TPC-H-Q5-shaped snowflake join: fact table joined through three
     broadcast dims — zero shuffles until the final groupBy."""
-    li, orders, customer, nation, region = _t(
+    li, orders, customer, nation, region = fixtures(
         spark, sf_dir, "lineitem", "orders", "customer", "nation", "region")
     orders = FilterContinuous("o_orderdate", ContinuousOps.GREATER_EQUAL,
                               "1996-01-01")(orders)
@@ -202,7 +197,7 @@ WHERE EXISTS (SELECT 1 FROM orders
 """)
 def q_semi_join(spark, sf_dir):
     """Select-by-Data-Index keep case → left_semi (owselectbydataindex.py)."""
-    orders, customer = _t(spark, sf_dir, "orders", "customer")
+    orders, customer = fixtures(spark, sf_dir, "orders", "customer")
     p = FilterString("o_orderstatus", StringOps.EQUAL, "P")(orders)
     keys = p.select(F.col("o_custkey").alias("c_custkey"))
     return semi_join(customer, keys, ["c_custkey"]).select("c_custkey", "c_name")
@@ -216,7 +211,7 @@ WHERE NOT EXISTS (SELECT 1 FROM orders
 """)
 def q_anti_join(spark, sf_dir):
     """Select-by-Data-Index remove case → left_anti."""
-    orders, customer = _t(spark, sf_dir, "orders", "customer")
+    orders, customer = fixtures(spark, sf_dir, "orders", "customer")
     p = FilterString("o_orderstatus", StringOps.EQUAL, "P")(orders)
     keys = p.select(F.col("o_custkey").alias("c_custkey"))
     return anti_join(customer, keys, ["c_custkey"]).select("c_custkey", "c_name")
@@ -245,7 +240,7 @@ GROUP BY event_type
 def q_groupby_matrix(spark, sf_dir):
     """The Group-By widget agg matrix (owgroupby.py:57-183) minus the
     order-dependent/random aggs, exact percentiles."""
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = fixtures(spark, sf_dir, "events")
     return G.aggregate(events, ["event_type"], {
         "value": ["mean", "median", "q1", "q3", "min", "max", "std", "var",
                   "sum", "span", "count_defined", "count",
@@ -262,7 +257,7 @@ GROUP BY o_orderstatus
 def q_concatenate_agg(spark, sf_dir):
     """Concatenate aggregation — ' '-joined values (owgroupby.py:57-62),
     sorted for distributed determinism."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     return G.aggregate(orders, ["o_orderstatus"],
                        {"o_orderpriority": ["concatenate"]})
 
@@ -278,7 +273,7 @@ FROM lineitem GROUP BY l_returnflag
 def q_pivot(spark, sf_dir):
     """Pivot (owpivot.py) — known column values passed explicitly, skipping
     the distinct-collection job."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     return R.pivot(li, "l_returnflag", "l_linestatus", "l_quantity", "sum",
                    col_values=["F", "O"])
 
@@ -290,7 +285,7 @@ FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
 def q_pivot_cube_totals(spark, sf_dir):
     """Pivot h/v/grand totals (owpivot.py:115-127) in ONE pass via cube —
     grouping sets are the free Spark win SURVEY §2.5 calls out."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     return R.pivot_totals(li, "l_returnflag", "l_linestatus", None, "count") \
             .withColumnRenamed("total_count", "total_count")
 
@@ -309,7 +304,7 @@ SELECT l_orderkey, l_linenumber, item, value FROM (
 def q_melt(spark, sf_dir):
     """Melt wide→long (owmelt.py:200-296) via the stack generator — row-local,
     no shuffle."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     return R.melt(li, ["l_orderkey", "l_linenumber"],
                   ["l_quantity", "l_extendedprice", "l_discount"])
 
@@ -326,7 +321,7 @@ SELECT o_orderkey, o_custkey, o_totalprice FROM (
 def q_unique_first(spark, sf_dir):
     """Unique widget, 'first' tiebreaker over explicit order
     (owunique.py:30-35) — row_number window, one shuffle."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     return R.unique(orders, ["o_custkey"], tiebreaker="first",
                     order_col="o_orderkey") \
             .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -341,7 +336,7 @@ SELECT c_mktsegment, c_custkey, c_acctbal FROM (
 ) WHERE rn <= 3
 """)
 def q_topk_per_group(spark, sf_dir):
-    (customer,) = _t(spark, sf_dir, "customer")
+    (customer,) = fixtures(spark, sf_dir, "customer")
     return W.top_k_per_group(
         customer.select("c_mktsegment", "c_custkey", "c_acctbal"),
         ["c_mktsegment"], [F.col("c_acctbal").desc(), F.col("c_custkey")], 3)
@@ -355,7 +350,7 @@ SELECT event_id, user_id, value,
 FROM events
 """)
 def q_window_lag(spark, sf_dir):
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = fixtures(spark, sf_dir, "events")
     return W.with_lag(events, "value", ["user_id"], ["ts", "event_id"]) \
             .select("event_id", "user_id", "value", "value_lag1")
 
@@ -367,7 +362,7 @@ SELECT event_id, user_id,
 FROM events
 """)
 def q_window_cumsum(spark, sf_dir):
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = fixtures(spark, sf_dir, "events")
     return W.with_cumulative(events, "value", "sum", ["user_id"],
                              ["ts", "event_id"]) \
             .select("event_id", "user_id", "value_sum_cum")
@@ -382,7 +377,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority
 """)
 def q_distribution(spark, sf_dir):
     """Discrete distribution (distribution.py:101) — grouped count."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     return S.distribution(orders, "o_orderpriority")
 
 
@@ -394,7 +389,7 @@ GROUP BY l_returnflag, l_linestatus
 """)
 def q_contingency(spark, sf_dir):
     """Contingency (contingency.py:31-340) — 2-D grouped count."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     return S.contingency(li, "l_returnflag", "l_linestatus")
 
 
@@ -411,7 +406,7 @@ GROUP BY 1, 3, 4 ORDER BY 1
 """)
 def q_histogram(spark, sf_dir):
     """Equal-width histogram — binned counts (owdistributions.py shape)."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     return S.histogram(li, "l_quantity", bins=10)
 
 
@@ -440,7 +435,7 @@ FROM lineitem
 def q_basic_stats(spark, sf_dir):
     """BasicStats one-pass per-column stats (basic_stats.py:18-52) — all
     columns in a single agg scan."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     return S.basic_stats(li, ["l_quantity", "l_extendedprice", "l_discount"])
 
 
@@ -458,7 +453,7 @@ SELECT o_orderkey, o_orderstatus, o_totalprice, src FROM (
 def q_concat_source(spark, sf_dir):
     """Concatenate widget: union with provenance column
     (owconcatenate.py:237)."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     o = orders.select("o_orderkey", "o_orderstatus", "o_totalprice")
     a = FilterString("o_orderstatus", StringOps.EQUAL, "O")(o)
     b = FilterString("o_orderstatus", StringOps.EQUAL, "F")(o)
@@ -476,7 +471,7 @@ FROM part
 def q_create_class(spark, sf_dir):
     """Create Class — ordered substring rules, first match wins
     (owcreateclass.py:24-70)."""
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = fixtures(spark, sf_dir, "part")
     return R.create_class(part, "p_name",
                           [("widget", "widgetish"), ("bolt", "boltish")],
                           default="other") \
@@ -726,7 +721,7 @@ def q_venn(spark, sf_dir):
     names."""
     from orange3_spark.operators.setops import venn_counts
 
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     tables = {
         "in_en": docs.where(F.col("lang") == "en").select("doc_id"),
         "in_src01": docs.where(F.col("source").isin("src0", "src1"))
@@ -794,7 +789,7 @@ def q_join_salted(spark, sf_dir):
     the oracle checks."""
     from orange3_spark.operators.merge import salted_join
 
-    orders, customer, nation = _t(spark, sf_dir, "orders", "customer",
+    orders, customer, nation = fixtures(spark, sf_dir, "orders", "customer",
                                   "nation")
     j = salted_join(orders.select("o_custkey", "o_totalprice"),
                     customer.select(F.col("c_custkey").alias("o_custkey"),
@@ -887,7 +882,7 @@ def q_zorder(spark, sf_dir):
     bit arithmetic, mirrored term for term in SQL."""
     from orange3_spark.operators.window import zorder_key
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     d = li.select(
         F.col("l_quantity").cast("long").alias("qa"),
         F.floor(F.col("l_extendedprice").cast("double") / F.lit(2000.0))
@@ -926,7 +921,7 @@ def q_snapshot_diff(spark, sf_dir):
     pipeline alerts on."""
     from orange3_spark.operators.merge import snapshot_diff
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     base = orders.select("o_orderkey", "o_orderstatus", "o_totalprice")
     old = base.where(F.col("o_orderkey") % 10 < 7)
     new = (base.where((F.col("o_orderkey") % 10 >= 3)

@@ -10,13 +10,8 @@ from orange3_spark.ml import cluster as C
 from orange3_spark.ml import evaluation as E
 from orange3_spark.ml import learners as L
 from orange3_spark.plans import oracle_replay as OR
-from orange3_spark.plans.registry import query
-from orange3_spark.session import load_tables
-
-
-def _t(spark, sf_dir, *names):
-    d = load_tables(spark, sf_dir, names)
-    return [d[n] for n in names]
+from orange3_spark.plans.registry import fixtures, query
+from orange3_spark.session import spread
 
 
 _SPLIT = "substring(md5(CAST(o_orderkey AS VARCHAR)),1,8) < '3fffffff'"  # 25% test
@@ -74,7 +69,7 @@ FROM test t, m
 def q_ml_majority_ca(spark, sf_dir):
     """Majority classifier + accuracy on a deterministic hash split — the
     whole evaluate loop (train/fit/predict/score) is oracle-checkable."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     train, test = E.train_test_split(orders, "o_orderkey", 0.25)
     model = L.majority_learner(train, "o_orderpriority")
     acc = E.ca(model.predict(test), label="o_orderpriority")
@@ -94,7 +89,7 @@ GROUP BY fit.a, fit.b
 def q_ml_ols(spark, sf_dir):
     """OLS via normal-equation aggregates (one scan for X'X/X'y, driver
     solve) — exact, hence oracle-equal to SQL regr_slope/regr_intercept."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     train, test = E.train_test_split(orders, "o_orderkey", 0.25)
     m = L.ols_learner(train, ["o_custkey"], "o_totalprice")
     r = E.rmse(m.predict(test), label="o_totalprice")
@@ -129,7 +124,7 @@ def q_ml_knn_ca(spark, sf_dir):
     """kNN (k=5, euclidean, broadcast+BLAS inference) on the embeddings
     table — fully deterministic, so even the learner is oracle-checkable
     (the oracle is the literal top-k-join formulation)."""
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     train, test = E.train_test_split(emb, "vec_id", 0.25)
     model = L.knn_classifier(train, array_col="embedding", class_col="label", k=5)
     pred = model.predict(test).withColumn(
@@ -154,7 +149,7 @@ def q_ml_kmeans(spark, sf_dir):
     assignment (the float ``avg``+round version hash-failed driver rounds
     1-3).  The seeded MLlib k-means|| fit stays pytest-covered
     (``ml/cluster.py:kmeans``)."""
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     clustered = C.kmeans_lloyd(emb, "vec_id", array_col="embedding",
                                k=8, n_iter=2)
     per = (clustered.groupBy("cluster", "label").count())
@@ -201,7 +196,7 @@ def q_ml_dbscan(spark, sf_dir):
     recursive-CTE oracle."""
     from pyspark.sql import functions as F2
 
-    nation, customer, orders = _t(spark, sf_dir, "nation", "customer", "orders")
+    nation, customer, orders = fixtures(spark, sf_dir, "nation", "customer", "orders")
     feats = (orders.join(customer, orders.o_custkey == customer.c_custkey)
              .join(nation, customer.c_nationkey == nation.n_nationkey)
              .groupBy("n_nationkey")
@@ -234,7 +229,7 @@ def q_ml_pca(spark, sf_dir):
     path stays pytest-covered (``ml/cluster.py:pca``)."""
     from orange3_spark.stats.distance import _standardize
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     cols = ["l_quantity", "l_extendedprice"]
     z = _standardize(li.select(*cols), cols)
     _, _, ratios = C.pca_cov_eigen(z, cols, n_components=2)
@@ -264,7 +259,7 @@ def q_ml_cv_ols(spark, sf_dir):
     subtraction, held-out RSS from the same moments) vs the naive 2k
     passes.  Iterative learners ride the generic ``cross_validate`` and are
     quality-asserted in pytest (logistic regression: ``tests/test_ml.py``)."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     rows = E.cv_ols(orders, "o_orderkey", 3, ["o_custkey"], "o_totalprice")
     return spark.createDataFrame(
         [(r["fold"], r["intercept"], r["coefficients"][0], r["rmse"])
@@ -308,7 +303,7 @@ def q_ml_metrics(spark, sf_dir):
     scans here, r3's single biggest bench regression at 11.2 s); batch
     scoring goes through one agg — the same one-scan-many-scores shape as
     ``evaluation.regression_scores``/``classification_scores``."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     train, test = E.train_test_split(orders, "o_orderkey", 0.25)
     y = (F.col("o_orderpriority") == "1-URGENT").cast("double")
     prior = train.agg(F.avg(y).alias("p"),
@@ -357,7 +352,7 @@ def q_ml_auc(spark, sf_dir):
     bounded frame — never the raw rows.  Exactness: counts are integers,
     so every rank is a multiple of 0.5 and every partial sum is exact in
     float64 — order-independent without quantization."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     scored = orders.select(
         (F.col("o_orderpriority") == "1-URGENT").cast("double").alias("y"),
         F.col("o_totalprice").alias("score"))
@@ -397,7 +392,7 @@ def q_ml_scores_table(spark, sf_dir):
     Threshold classifier on a deterministic hash split; all six metrics
     derive from four exact integer counts, so the whole row is
     order-independent."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     train, test = E.train_test_split(orders, "o_orderkey", 0.25)
     thr = train.agg(F.avg("o_totalprice").alias("t")).first().t
     scored = test.select(
@@ -435,7 +430,7 @@ def q_ml_shuffle_split(spark, sf_dir):
     — the generic fit-per-resample loop is 6 scans and was a 3× bench
     regression in r3); the generic ``shuffle_split`` stays pytest-covered
     for arbitrary models."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     scores = E.shuffle_split_ols(orders, "o_orderkey", ["o_custkey"],
                                  "o_totalprice", n_resamples=3,
                                  test_size=0.25)
@@ -552,7 +547,7 @@ def q_ml_lda(spark, sf_dir):
     import math
 
     from orange3_spark.ml.projection import fisher_criterion
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     d = orders.select(
         F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0)
          .alias("cls"),
@@ -585,7 +580,7 @@ def q_ml_cur(spark, sf_dir):
     form (cos θ, sin θ), θ = ½·atan2(2·E[ab], E[a²]−E[b²]), which the
     oracle evaluates; higher ranks/column counts stay pytest-verified."""
     from orange3_spark.ml.projection import cur_column_leverage
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     ranked = cur_column_leverage(li, ["l_discount", "l_tax"], rank=1)
     return spark.createDataFrame(
         [(c, float(round(v, 6))) for c, v in ranked],
@@ -688,7 +683,7 @@ def q_ml_pls(spark, sf_dir):
     learner (fit + predict + RMSE) is oracle-checked; multi-component
     deflation parity is pytest-verified against a literal NIPALS."""
     from orange3_spark.ml.pls import pls_regression
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     m = pls_regression(li, ["l_quantity", "l_discount"], "l_extendedprice",
                        n_components=1)
     r = E.rmse(m.predict(li), label="l_extendedprice")
@@ -729,7 +724,7 @@ def q_ml_curvefit(spark, sf_dir):
     in one step — giving a closed-form Cramer's-rule SQL oracle.  The
     genuinely nonlinear path (exp decay) is pytest-verified."""
     from orange3_spark.ml.curvefit import curve_fit_learner
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     mu = li.agg(F.avg(F.col("l_quantity").cast("double"))).first()[0]
     d = li.select(
         (F.col("l_quantity").cast("double") - F.lit(float(mu))).alias("x"),
@@ -777,7 +772,7 @@ def q_ml_threshold(spark, sf_dir):
     arrive via a window over (score, count) pairs — bounded-cardinality
     keys, never raw rows — so the full search is oracle-checkable."""
     from orange3_spark.ml.calibration import threshold_search
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     lab = orders.select(
         F.col("o_totalprice").cast("double").alias("s"),
         F.when(F.col("o_orderpriority") == "1-URGENT", 1.0)
@@ -806,7 +801,7 @@ def q_ml_calibration_curve(spark, sf_dir):
     One min/max aggregate + one groupBy; the Platt/isotonic calibrators
     that consume this curve are pytest-verified (MLlib PAV vs literal PAV)."""
     from orange3_spark.ml.calibration import reliability_curve
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     lab = orders.select(
         F.col("o_totalprice").cast("double").alias("s"),
         F.when(F.col("o_orderpriority") == "1-URGENT", 1.0)
@@ -872,7 +867,7 @@ def q_ml_cn2(spark, sf_dir):
     default rule, so the oracle replays it exactly; multi-selector beam
     search (XOR-only-separable classes) is pytest-verified."""
     from orange3_spark.ml.rules import cn2_induce, rules_to_dataframe
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     d = li.select(
         "l_linestatus",
         F.year("l_shipdate").cast("string").alias("ship_year"),
@@ -908,7 +903,7 @@ def q_ml_logreg_cv(spark, sf_dir):
     sqrt(maj·(1−maj)/n_test); fit-vs-MLlib parity is pytest-asserted."""
     import math
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     data = orders.select(
         "o_orderkey",
         # unit-scale features keep the Hessian well-conditioned; affine
@@ -941,7 +936,7 @@ def q_outlier_iforest(spark, sf_dir):
     pytest-asserted (tests/test_outlier_models.py)."""
     from orange3_spark.ml.outlier_models import isolation_forest
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     P = OR.IFOREST_PARAMS
     model = isolation_forest(
         orders.na.drop(subset=["o_totalprice", "o_custkey"]),
@@ -967,7 +962,7 @@ def q_outlier_envelope(spark, sf_dir):
     stay pytest-asserted."""
     from orange3_spark.ml.outlier_models import elliptic_envelope
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     model = elliptic_envelope(li, OR.ENVELOPE_COLS,
                               id_cols=["l_orderkey", "l_linenumber"])
     flagged = model.predict(li, contamination=OR.ENVELOPE_CONTAMINATION)
@@ -990,7 +985,7 @@ def q_outlier_ocsvm(spark, sf_dir):
     from orange3_spark.ml.outlier_models import one_class_svm
 
     P = OR.OCSVM_PARAMS
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     data = orders.na.drop(subset=["o_totalprice", "o_custkey"])
     model = one_class_svm(data, ["o_totalprice", "o_custkey"], nu=P["nu"],
                           seed=P["seed"], max_samples=P["max_samples"],
@@ -1016,7 +1011,7 @@ def q_ml_svr(spark, sf_dir):
     stay pytest-asserted (tests/test_svr.py)."""
     from orange3_spark.ml.svr import linear_svr
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     P = OR.SVR_PARAMS
     data = orders.na.drop(subset=["o_totalprice", "o_custkey"]).select(
         "o_orderkey",
@@ -1077,7 +1072,7 @@ def q_ml_silhouette(spark, sf_dir):
     pytest-covered (``ml/cluster.silhouette``)."""
     from orange3_spark.ml.cluster import kmeans_lloyd_fit, silhouette_exact
 
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     assigned, _ = kmeans_lloyd_fit(emb, "vec_id", array_col="embedding",
                                    k=4, n_iter=4)
     s = silhouette_exact(assigned)
@@ -1097,7 +1092,7 @@ def q_ml_adaboost(spark, sf_dir):
     (flags + quantized margins + confusion counts) is hash-checked."""
     from orange3_spark.ml.ensembles import ada_boost_classifier
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     P = OR.ADABOOST_PARAMS
     base = orders.na.drop(subset=["o_totalprice", "o_custkey",
                                   "o_orderpriority"])
@@ -1213,7 +1208,7 @@ def q_ml_stack(spark, sf_dir):
 
     from orange3_spark.ml.ensembles import stacked_ols_quantized
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     data = (li.na.drop(subset=["l_quantity", "l_discount",
                                "l_extendedprice"])
             .select((F.col("l_orderkey") * 10 + F.col("l_linenumber"))
@@ -1233,9 +1228,7 @@ def q_ml_stack(spark, sf_dir):
     # results are identical under any partitioning.
     from pyspark import StorageLevel
 
-    from orange3_spark.ml.outlier_models import _spread_for_scoring
-
-    data = _spread_for_scoring(data).persist(StorageLevel.MEMORY_AND_DISK)
+    data = spread(data).persist(StorageLevel.MEMORY_AND_DISK)
     _folds, _fulls, (mi, w0, w1), pexpr = stacked_ols_quantized(
         data, "key", ["qx0", "qx1"], "qy", k=3)
     res = F.col("qy").cast("double") - pexpr
@@ -1267,7 +1260,7 @@ def q_ml_svm(spark, sf_dir):
     from orange3_spark.ml.svr import svm_classifier
 
     P = OR.SVM_PARAMS
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     data = (emb.filter(F.col("label").isNotNull()
                        & F.col("embedding").isNotNull())
             .withColumn("_y", (F.col("label") < 5).cast("double")))
@@ -1323,7 +1316,7 @@ def q_ml_knn_reg(spark, sf_dir):
     vectorized top-k and is fine at any SF)."""
     import math
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     data = (orders.na.drop(subset=["o_custkey", "o_totalprice"])
             .select(F.col("o_orderkey").alias("id"),
                     F.col("o_custkey").cast("long").alias("qx"),
@@ -1334,9 +1327,7 @@ def q_ml_knn_reg(spark, sf_dir):
     # partitioning-independent (same rationale as q_ml_mlp_reg)
     from pyspark import StorageLevel
 
-    from orange3_spark.ml.outlier_models import _spread_for_scoring
-
-    data = _spread_for_scoring(data).persist(StorageLevel.MEMORY_AND_DISK)
+    data = spread(data).persist(StorageLevel.MEMORY_AND_DISK)
     train, test = E.train_test_split(data, "id", 0.25)
     model = L.knn_regressor(train, ["qx"], "qy", k=5, id_col="id")
     pred = model.predict(test)
@@ -1369,7 +1360,7 @@ def q_ml_mlp_reg(spark, sf_dir):
     from orange3_spark.ml.neural import mlp_regressor
 
     P = OR.MLP_PARAMS
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     data = (li.na.drop(subset=["l_quantity", "l_discount",
                                "l_extendedprice"])
             .select((F.col("l_orderkey") * 10 + F.col("l_linenumber"))
@@ -1386,9 +1377,7 @@ def q_ml_mlp_reg(spark, sf_dir):
     # any partitioning.
     from pyspark import StorageLevel
 
-    from orange3_spark.ml.outlier_models import _spread_for_scoring
-
-    data = _spread_for_scoring(data).persist(StorageLevel.MEMORY_AND_DISK)
+    data = spread(data).persist(StorageLevel.MEMORY_AND_DISK)
     train, test = E.train_test_split(data, "key", P["test_fraction"])
     model = mlp_regressor(train, ["x0", "x1"], "y", id_cols=["key"],
                           epochs=P["epochs"], seed=P["seed"],
@@ -1438,7 +1427,7 @@ def q_ml_roc_curve(spark, sf_dir):
     ml/evaluation.performance_curves, the aggregate-before-window shape
     of auc_rank_frame extended to full curves.  Every value is a ratio of
     exact integer counts, so the oracle replays it verbatim."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     scored = (orders.na.drop(subset=["o_totalprice", "o_orderpriority"])
               .select(F.floor(F.col("o_totalprice").cast("double")
                               / F.lit(100.0)).alias("score"),
@@ -1476,7 +1465,7 @@ def q_ml_ari(spark, sf_dir):
     with mirrored final divisions."""
     from orange3_spark.ml.cluster import adjusted_rand_index, kmeans_lloyd
 
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     clustered = kmeans_lloyd(emb, "vec_id", array_col="embedding",
                              k=8, n_iter=2)
     ari = adjusted_rand_index(clustered, "cluster", "label")
@@ -1498,7 +1487,7 @@ def q_ml_logreg_irls(spark, sf_dir):
     from orange3_spark.ml.learners import logistic_irls
 
     P = OR.LOGREG_IRLS_PARAMS
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     data = (orders.na.drop(subset=["o_totalprice", "o_custkey",
                                    "o_orderpriority"])
             .select((F.col("o_totalprice").cast("double")
@@ -1532,7 +1521,7 @@ def q_ml_adaboost_reg(spark, sf_dir):
     quantized prediction and absolute-error checksums."""
     from orange3_spark.ml.ensembles import ada_boost_regressor
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     P = OR.ADABOOST_R2_PARAMS
     base = orders.na.drop(subset=["o_custkey", "o_orderkey",
                                   "o_totalprice"])
@@ -1565,7 +1554,7 @@ def q_ml_correspondence(spark, sf_dir):
     the quantized factors."""
     from orange3_spark.ml.projection import correspondence_analysis
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     return (correspondence_analysis(orders, "o_orderpriority",
                                     "o_orderstatus", n_components=2)
             .orderBy("kind", "level"))
@@ -1582,7 +1571,7 @@ def q_ml_nomogram(spark, sf_dir):
     (plans/oracle_replay.nomogram_oracle) recomputes bit-for-bit."""
     from orange3_spark.ml.nomogram import nb_nomogram
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     d = orders.select(
         F.col("o_orderstatus"), F.col("o_orderpriority"),
         F.floor(F.col("o_totalprice") / F.lit(50000.0)).cast("long")
@@ -1605,7 +1594,7 @@ def q_permutation_importance(spark, sf_dir):
     r2_from_moments solve."""
     from orange3_spark.ml.permutation import permutation_importance_ols
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     # the synthetic lineitem has duplicate (orderkey, linenumber) pairs;
     # a permutation needs UNIQUE row identity, so aggregate to one row
     # per id first (min is deterministic and engine-portable)
@@ -1646,7 +1635,7 @@ def q_heatmap_order(spark, sf_dir):
     (plans/oracle_replay.heatmap_order_oracle)."""
     from orange3_spark.ml.hierarchical import heatmap_order
 
-    nation, customer, orders = _t(spark, sf_dir,
+    nation, customer, orders = fixtures(spark, sf_dir,
                                   "nation", "customer", "orders")
     feats = (orders.join(customer, orders.o_custkey == customer.c_custkey)
              .join(nation, customer.c_nationkey == nation.n_nationkey)
@@ -1674,7 +1663,7 @@ def q_ml_cn2_depth2(spark, sf_dir):
     from orange3_spark.ml.rules import cn2_induce, rules_to_dataframe
     from orange3_spark.plans.oracle_replay import CN2_D2
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     d = li.select(
         "l_linestatus",
         F.year("l_shipdate").cast("string").alias("ship_year"),
@@ -1705,7 +1694,7 @@ def q_ml_cn2_unordered(spark, sf_dir):
                                         unordered_rules_to_dataframe)
     from orange3_spark.plans.oracle_replay import CN2_UNORD
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     d = li.select(
         "l_linestatus",
         F.year("l_shipdate").cast("string").alias("ship_year"),
@@ -1733,7 +1722,7 @@ def q_ml_cn2_sd(spark, sf_dir):
     from orange3_spark.ml.rules import cn2_sd_induce, sd_rules_to_dataframe
     from orange3_spark.plans.oracle_replay import CN2_SD
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     d = li.select(
         "l_linestatus",
         F.year("l_shipdate").cast("string").alias("ship_year"),
@@ -1754,7 +1743,7 @@ def q_heatmap_order_olo(spark, sf_dir):
     against exhaustive flip enumeration."""
     from orange3_spark.ml.hierarchical import heatmap_order
 
-    nation, customer, orders = _t(spark, sf_dir,
+    nation, customer, orders = fixtures(spark, sf_dir,
                                   "nation", "customer", "orders")
     feats = (orders.join(customer, orders.o_custkey == customer.c_custkey)
              .join(nation, customer.c_nationkey == nation.n_nationkey)

@@ -8,16 +8,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from orange3_spark.operators import groupby as G
-from orange3_spark.plans.registry import query
+from orange3_spark.plans.registry import fixtures, query
 from orange3_spark.preprocess import discretize as D
 from orange3_spark.preprocess import score as SC
 from orange3_spark.preprocess import transform as P
-from orange3_spark.session import load_tables
-
-
-def _t(spark, sf_dir, *names):
-    d = load_tables(spark, sf_dir, names)
-    return [d[n] for n in names]
 
 
 @query("q_discretize_equal_width", """
@@ -34,7 +28,7 @@ FROM lineitem, w GROUP BY 1 ORDER BY 1
 def q_discretize_equal_width(spark, sf_dir):
     """EqualWidth binning (discretize.py:211): min/max pass → row-local CASE
     thresholds (codegen, no ML stage)."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     out = D.discretize(li, "l_quantity", "equal_width", 4, out_col="bin")
     return out.groupBy("bin").agg(F.count(F.lit(1)).alias("freq")).orderBy("bin")
 
@@ -54,7 +48,7 @@ FROM lineitem, q GROUP BY 1 ORDER BY 1
 def q_discretize_equal_freq(spark, sf_dir):
     """EqualFreq binning (discretize.py:181): exact percentile thresholds
     (approxQuantile is the 100 TB path — same API, approx=True)."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     out = D.discretize(li, "l_quantity", "equal_freq", 4, out_col="bin")
     return out.groupBy("bin").agg(F.count(F.lit(1)).alias("freq")).orderBy("bin")
 
@@ -72,7 +66,7 @@ FROM orders GROUP BY o_orderpriority
 def q_continuize_indicators(spark, sf_dir):
     """Continuize 'Indicators' treatment (continuize.py:11-100) — one-hot
     columns summed per group."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     out = P.continuize(orders, "o_orderstatus", ["F", "O", "P"], "indicators")
     agg = G.aggregate(out, ["o_orderpriority"], {
         "o_orderstatus=F": [("sum", "n_F")],
@@ -96,7 +90,7 @@ FROM t, m GROUP BY l_returnflag
 def q_impute_mean(spark, sf_dir):
     """Average imputation (impute.py:96): one stats pass + fillna; NULLs
     synthesized from zero discounts since the fixtures are complete."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     t = li.select(
         F.when(F.col("l_discount") == 0, None)
          .otherwise(F.col("l_discount")).alias("d"),
@@ -120,7 +114,7 @@ FROM lineitem, s GROUP BY l_returnflag
 def q_normalize_standardize(spark, sf_dir):
     """Normalize-by-SD (preprocess.py:261-355) as plain affine exprs from one
     stats pass."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     norm = P.normalize(li, ["l_quantity"], method="standardize")
     return G.aggregate(norm, ["l_returnflag"], {
         "l_quantity": [("mean", "zmean"), ("min", "zmin"), ("max", "zmax")],
@@ -184,7 +178,7 @@ def q_entropy_mdl_bins(spark, sf_dir):
     runs the identical aggregation+scoring and is pytest-verified."""
     import math
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     res = D.entropy_mdl_first_split(li, "l_quantity", "l_returnflag")
     cut, gain, accept = res
     gr = round(gain, int(5 - math.floor(math.log10(abs(gain))))) if gain else 0.0
@@ -272,7 +266,7 @@ def q_feature_scores(spark, sf_dir):
             return 0.0
         return float(round(v, int(5 - math.floor(math.log10(abs(v))))))
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     rows = []
     # THREE scans total: one shared contingency feeds all four discrete
     # scorers, one grouped agg scores every ANOVA column, one agg scores
@@ -306,7 +300,7 @@ def q_discretize_timewidth(spark, sf_dir):
     """FixedTimeWidth (Orange/preprocess/discretize.py:272): 6-hour bins by
     epoch-aligned integer arithmetic — row-local, codegen, no UDF; the bin
     start doubles as a calendar-stable join key."""
-    (ev,) = _t(spark, sf_dir, "events")
+    (ev,) = fixtures(spark, sf_dir, "events")
     out = D.fixed_time_width(ev, "ts", 6, "hour", out_col="bin_start",
                              max_intervals=None)
     return (out.groupBy("bin_start")
@@ -343,7 +337,7 @@ def q_discretize_nice(spark, sf_dir):
     min/max/distinct agg, driver-side candidate arithmetic (powers of ten ×
     nice factors), pick the candidate nearest 4 bins, then a row-local
     bucketize.  The oracle replays the same candidate search in SQL."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     out = D.nice_binning(li, "l_extendedprice", 4, out_col="bin")
     return (out.groupBy("bin").agg(F.count(F.lit(1)).alias("freq"))
                .orderBy("bin"))
@@ -364,7 +358,7 @@ def q_scale_median_span(spark, sf_dir):
     (Orange/preprocess/preprocess.py:467-545, the two variants beyond
     normalize's mean/std): one stats pass, then a row-local affine map;
     aggregated per returnflag for a compact oracle-checked projection."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     scaled = P.scale(li, ["l_discount"], center="median", scaling="span")
     return (scaled.groupBy("l_returnflag")
                   .agg(F.avg("l_discount").alias("avg_scaled"),
@@ -384,7 +378,7 @@ def q_randomize(spark, sf_dir):
     the unshuffled column; decoupling from the other columns is
     pytest-checked (test_randomize_breaks_correlation) since no SQL oracle
     can pin a random pairing."""
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = fixtures(spark, sf_dir, "customer")
     out = P.randomize(cust.select("c_custkey", "c_acctbal"), ["c_acctbal"],
                       seed=7)
     return out.select(F.col("c_acctbal").alias("shuffled_acctbal"))
@@ -429,7 +423,7 @@ def q_adaptive_normalize(spark, sf_dir):
     the nearest data point while the engines' m/sd agree to ~1e-13 —
     counts cannot flip; disc maps to {0, 0.9, 1.0}, all far from ±0.5.
     The dispatch itself is pinned by the branch column."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     data = li.select(
         F.col("l_quantity").cast("double").alias("qty"),
         F.when(F.col("l_discount") > 0.08,
@@ -485,7 +479,7 @@ def q_select_random(spark, sf_dir):
     identically at any scale; the kept columns are then profiled in ONE
     aggregation pass (column pruning pushes exactly the 3 kept columns
     into the parquet scan)."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     keep = _rand_feat_keep()
     aggs = []
     for c in keep:

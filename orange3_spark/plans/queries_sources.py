@@ -23,13 +23,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from orange3_spark.plans import oracle_replay as OR2
-from orange3_spark.plans.registry import query
-from orange3_spark.session import load_tables
-
-
-def _t(spark, sf_dir, *names):
-    d = load_tables(spark, sf_dir, names)
-    return [d[n] for n in names]
+from orange3_spark.plans.registry import fixtures, query
 
 
 def _tmpdir() -> str:
@@ -66,7 +60,7 @@ def q_tab_roundtrip(spark, sf_dir):
     typed casts) → aggregate.  Continuous columns come back as doubles."""
     from orange3_spark.sources.tab import read_tab, write_tab
 
-    (nation,) = _t(spark, sf_dir, "nation")
+    (nation,) = fixtures(spark, sf_dir, "nation")
     path = os.path.join(_tmpdir(), "nation.tab")
     write_tab(nation, path)
     back = read_tab(spark, path)
@@ -90,7 +84,7 @@ def q_csv_roundtrip(spark, sf_dir):
     continuous) → aggregate."""
     from orange3_spark.sources.csv import read_csv
 
-    (supplier,) = _t(spark, sf_dir, "supplier")
+    (supplier,) = fixtures(spark, sf_dir, "supplier")
     path = os.path.join(_tmpdir(), "supplier.csv")
     _bounded_pandas(supplier).to_csv(path, index=False)
     back = read_csv(spark, path)
@@ -148,7 +142,7 @@ def q_excel_roundtrip(spark, sf_dir):
     from orange3_spark.sources.registry import read_table
     from orange3_spark.sources.xlsx import write_xlsx
 
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = fixtures(spark, sf_dir, "part")
     path = os.path.join(_tmpdir(), "part.xlsx")
     write_xlsx(part, path)
     back = read_table(spark, path)
@@ -170,7 +164,7 @@ def q_url_read(spark, sf_dir):
     dispatch ``.csv`` to the csv reader."""
     from orange3_spark.sources.url import read_url
 
-    (region,) = _t(spark, sf_dir, "region")
+    (region,) = fixtures(spark, sf_dir, "region")
     path = os.path.join(_tmpdir(), "region.csv")
     _bounded_pandas(region).to_csv(path, index=False)
     back = read_url(spark, "file://" + path)
@@ -193,7 +187,7 @@ def q_basket_read(spark, sf_dir):
     long-form, aggregate per key."""
     from orange3_spark.sources.basket import read_basket
 
-    (nation,) = _t(spark, sf_dir, "nation")
+    (nation,) = fixtures(spark, sf_dir, "nation")
     rows = sorted(nation.collect(), key=lambda r: r["n_nationkey"])
     path = os.path.join(_tmpdir(), "nation.basket")
     with open(path, "w", encoding="utf-8") as fh:
@@ -218,7 +212,7 @@ def q_infer_types(spark, sf_dir):
     representative columns.  The oracle pins the expected ruling."""
     from orange3_spark.sources.infer import guess_data_type
 
-    orders, part = _t(spark, sf_dir, "orders", "part")
+    orders, part = fixtures(spark, sf_dir, "orders", "part")
     probes = {
         "o_orderstatus": orders.select(F.col("o_orderstatus").cast("string")),
         "o_orderpriority": orders.select(
@@ -264,7 +258,7 @@ def q_editdomain(spark, sf_dir):
         change_type, rename_values, rename_variables,
     )
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     out = rename_variables(orders, {"o_orderstatus": "status"})
     out = rename_values(out, "status",
                         {"F": "finished", "O": "open", "P": "pending"})
@@ -283,7 +277,7 @@ def q_purge_domain(spark, sf_dir):
     constant and the all-null column, keeps the informative five."""
     from orange3_spark.operators.editdomain import purge_domain
 
-    (customer,) = _t(spark, sf_dir, "customer")
+    (customer,) = fixtures(spark, sf_dir, "customer")
     noisy = customer.select(
         "*", F.lit("X").alias("const_col"),
         F.lit(None).cast("double").alias("null_col"))
@@ -302,7 +296,7 @@ def q_filter_samevalue(spark, sf_dir):
     """SameValue filter (``filter.py:143-197``) — missing-aware equality."""
     from orange3_spark.operators.filters import SameValue
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     out = SameValue(column="o_orderstatus", value="F")(orders)
     return out.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n"))
 
@@ -317,7 +311,7 @@ def q_filter_regex(spark, sf_dir):
     unanchored on both engines."""
     from orange3_spark.operators.filters import FilterRegex
 
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = fixtures(spark, sf_dir, "part")
     out = FilterRegex(column="p_name", pattern="g(ear|izmo)")(part)
     return out.groupBy("p_brand").agg(
         F.count(F.lit(1)).alias("n"),
@@ -334,7 +328,7 @@ def q_filter_stringlist(spark, sf_dir):
     matching."""
     from orange3_spark.operators.filters import FilterStringList
 
-    (customer,) = _t(spark, sf_dir, "customer")
+    (customer,) = fixtures(spark, sf_dir, "customer")
     out = FilterStringList(column="c_mktsegment",
                            values=["building", "AUTOMOBILE"],
                            case_sensitive=False)(customer)
@@ -368,7 +362,7 @@ def q_transform_kernels(spark, sf_dir):
         indicator, lookup, normalizer,
     )
 
-    (customer,) = _t(spark, sf_dir, "customer")
+    (customer,) = fixtures(spark, sf_dir, "customer")
     out = customer.select(
         lookup("c_nationkey", {0: "a", 1: "b", 2: "c"}, "z").alias("grp"),
         normalizer("c_acctbal", 1000.0, 0.001).alias("norm"),
@@ -400,7 +394,7 @@ def q_impute_model(spark, sf_dir):
     regr_slope/regr_intercept — exact normal-equation parity."""
     from orange3_spark.preprocess.transform import impute_model
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     msk = F.substring(
         F.md5(F.concat(F.col("l_orderkey").cast("string"), F.lit("-"),
                        F.col("l_linenumber").cast("string"))), 1, 2) < "29"
@@ -438,7 +432,7 @@ def q_time_parse(spark, sf_dir):
     per-format parse counts and max timestamps match the direct values."""
     from orange3_spark.functions.timeparse import lenient_timestamp
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     shapes = {
         "iso_seconds": "yyyy-MM-dd HH:mm:ss",
         "iso_z": "yyyy-MM-dd'T'HH:mm:ss'Z'",
@@ -497,7 +491,7 @@ def q_select_best(spark, sf_dir):
     must agree on the top-2 ranking."""
     from orange3_spark.preprocess.score import info_gain, select_best_features
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     feat = orders.select(
         F.col("o_orderpriority").alias("f_pri"),
         F.year("o_orderdate").cast("string").alias("f_year"),
@@ -529,7 +523,7 @@ def q_impute_asvalue(spark, sf_dir):
     content hash, impute, aggregate both outputs."""
     from orange3_spark.preprocess.transform import impute_as_value
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     msk = F.substring(
         F.md5(F.concat(F.col("o_orderkey").cast("string"), F.lit("p"))),
         1, 2) < "29"
@@ -552,7 +546,7 @@ def q_sample_fixed(spark, sf_dir):
     from the source (anti-join count 0)."""
     from orange3_spark.operators.filters import Random
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     s = Random(prob=300, seed=7)(orders)
     foreign = s.join(orders, "o_orderkey", "left_anti")
     return s.agg(F.count(F.lit(1)).alias("n_rows")).crossJoin(
@@ -570,7 +564,7 @@ def q_sample_bernoulli(spark, sf_dir):
 
     from orange3_spark.operators.filters import Random
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     n_src = orders.count()
     s = Random(prob=0.2, seed=11)(orders)
     tol = 5.0 * math.sqrt(n_src * 0.2 * 0.8)
@@ -596,7 +590,7 @@ def q_ml_tsne(spark, sf_dir):
     from orange3_spark.ml.projection import tsne
     from orange3_spark.operators.sample import sample_hash
 
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     P = OR2.TSNE_PARAMS
     sampled = sample_hash(emb, "vec_id", P["fraction"])
     out = tsne(sampled, "vec_id", array_col="embedding",
@@ -621,7 +615,7 @@ def q_ml_som(spark, sf_dir):
     from orange3_spark.ml.projection import som
 
     P = OR2.SOM_PARAMS
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     data = emb.filter(F.col("embedding").isNotNull())
     out = som(data, array_col="embedding", dim_x=P["dim_x"],
               dim_y=P["dim_y"], n_iterations=P["n_iterations"])
@@ -643,7 +637,7 @@ def q_ml_freeviz(spark, sf_dir):
     quantization end to end."""
     from orange3_spark.ml.projection import freeviz
 
-    nation, customer, orders = _t(spark, sf_dir,
+    nation, customer, orders = fixtures(spark, sf_dir,
                                   "nation", "customer", "orders")
     q = F.floor(F.col("o_totalprice").cast("double") * F.lit(100.0)
                 + F.lit(0.5)).cast("long")
@@ -727,7 +721,7 @@ def q_feature_scores_relieff(spark, sf_dir):
     signed |Δq| sums.  Previously rows-only."""
     from orange3_spark.preprocess.score import relieff
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     scores = relieff(li, ["l_quantity", "l_discount", "l_tax"],
                      "l_returnflag", n_samples=150, quantize=100.0)
     import math
@@ -750,7 +744,7 @@ def q_scoring_sheet(spark, sf_dir):
     deterministic only per-partitioning)."""
     from orange3_spark.ml.scoringsheet import scoring_sheet_learner
 
-    customer, orders = _t(spark, sf_dir, "customer", "orders")
+    customer, orders = fixtures(spark, sf_dir, "customer", "orders")
     df = (orders.join(customer,
                       orders.o_custkey == customer.c_custkey)
                 .select("o_totalprice", "c_acctbal",
@@ -780,7 +774,7 @@ def q_filter_hasclass(spark, sf_dir):
     filter, aggregate the survivors."""
     from orange3_spark.operators.filters import HasClass
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     msk = F.substring(
         F.md5(F.concat(F.col("o_orderkey").cast("string"), F.lit("c"))),
         1, 2) < "29"
@@ -809,7 +803,7 @@ def q_orc_roundtrip(spark, sf_dir):
     aggregate over the source parquet."""
     from orange3_spark.sources.registry import read_table
 
-    (customer,) = _t(spark, sf_dir, "customer")
+    (customer,) = fixtures(spark, sf_dir, "customer")
     path = os.path.join(_tmpdir(), "customer.orc")
     customer.write.mode("overwrite").orc(path)
     back = read_table(spark, path)
@@ -834,7 +828,7 @@ def q_jsonl_roundtrip(spark, sf_dir):
     EXPLICIT schema (schema inference is a full extra scan of the data —
     never pay it twice at 100 TB).  Exact-integer check values; oracle =
     the same aggregate over the source parquet."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     path = os.path.join(_tmpdir(), "documents_jsonl")
     docs.write.mode("overwrite").json(path)
     back = spark.read.schema(docs.schema).json(path)
@@ -859,7 +853,7 @@ def q_partitioned_sink(spark, sf_dir):
     audit pins `PartitionFilters` on the read (directory-level pruning,
     stronger than row-group PushedFilters).  l_quantity is
     integer-valued, so its double sum is exact and order-independent."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     path = os.path.join(_tmpdir(), "lineitem_by_flag")
     (li.select("l_orderkey", "l_quantity", "l_returnflag")
        .write.mode("overwrite").partitionBy("l_returnflag").parquet(path))
@@ -887,7 +881,7 @@ def q_ml_isomap(spark, sf_dir):
     from orange3_spark.operators.sample import sample_fixed_hash
 
     P = OR2.ISOMAP_PARAMS
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     sampled = sample_fixed_hash(emb.where(F.col("embedding").isNotNull()),
                                 "vec_id", P["n"])
     out = isomap(sampled, "vec_id", array_col="embedding",
@@ -928,7 +922,7 @@ def q_dst_roundtrip(spark, sf_dir):
     from orange3_spark.sources.dst import read_dst, write_dst
     from orange3_spark.stats.distance import row_distances
 
-    (sup,) = _t(spark, sf_dir, "supplier")
+    (sup,) = fixtures(spark, sf_dir, "supplier")
     d = (sup.where(F.col("s_suppkey") < 40)
          .select("s_suppkey", "s_acctbal", "s_nationkey"))
     pairs = row_distances(d, "s_suppkey", ["s_acctbal", "s_nationkey"])

@@ -8,14 +8,9 @@ from pyspark.sql import functions as F
 from orange3_spark.operators import rowagg, sample as S, window as W
 from orange3_spark.operators.reshape import split_column, transpose
 from orange3_spark.plans import oracle_replay as OR2
-from orange3_spark.plans.registry import query
+from orange3_spark.plans.registry import fixtures, query
 from orange3_spark.session import load_tables
 from orange3_spark.stats.basic import pearson_pairs, spearman_pairs
-
-
-def _t(spark, sf_dir, *names):
-    d = load_tables(spark, sf_dir, names)
-    return [d[n] for n in names]
 
 
 LI_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
@@ -40,7 +35,7 @@ FROM a
 def q_rowwise_agg(spark, sf_dir):
     """Per-row aggregates over selected columns (Aggregate Columns,
     owaggregatecolumns.py): codegen'd array expressions, zero shuffle."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     return rowagg.aggregate_columns(
         li.select("l_orderkey", "l_linenumber", *LI_COLS),
         LI_COLS,
@@ -60,7 +55,7 @@ SELECT 'l_extendedprice', 'l_discount',
 def q_corr_pearson(spark, sf_dir):
     """All-pairs Pearson r in ONE aggregation pass (owcorrelations.py loops
     per pair; here k(k-1)/2 corr aggregates share a single scan+reduce)."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     return pearson_pairs(li, ["l_quantity", "l_extendedprice", "l_discount"])
 
 
@@ -82,7 +77,7 @@ UNION ALL SELECT 'l_extendedprice', 'l_discount', corr(rp, rd) FROM r
 def q_corr_spearman(spark, sf_dir):
     """Spearman ρ = Pearson on average-tie ranks (scipy rankdata semantics,
     matching owcorrelations.py's spearmanr)."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     return spearman_pairs(li, ["l_quantity", "l_extendedprice", "l_discount"])
 
 
@@ -102,7 +97,7 @@ FROM (SELECT r.r_name, sum(o.o_totalprice) AS rev
 def q_transpose(spark, sf_dir):
     """Transpose (table.py:2231-2373): rows ↔ columns on a small aggregate —
     driver-local by design, bounded (SURVEY §7 risk register)."""
-    region, nation, customer, orders = _t(
+    region, nation, customer, orders = fixtures(
         spark, sf_dir, "region", "nation", "customer", "orders")
     rev = (orders.join(customer, orders.o_custkey == customer.c_custkey)
                  .join(nation, customer.c_nationkey == nation.n_nationkey)
@@ -129,7 +124,7 @@ def q_split_onehot(spark, sf_dir):
     float — the engine side is int64, so an un-cast oracle can hash-differ
     on integer-equal results (r3's only plausible divergence: values are
     exact counts on both sides)."""
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = fixtures(spark, sf_dir, "part")
     wide = split_column(part, "p_name", " ", mode="onehot",
                         values=["small", "red", "blue", "widget"])
     return wide.agg(
@@ -147,7 +142,7 @@ def q_split_tokens(spark, sf_dir):
     """Diagnostic companion to q_split_onehot: per-token explode+count so a
     grading divergence localizes to the exact token (split semantics,
     HUGEINT rendering, or canonicalization) instead of one opaque hash."""
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = fixtures(spark, sf_dir, "part")
     return (part.select(F.explode(F.split("p_name", " ")).alias("tok"))
                 .groupBy("tok").agg(F.count(F.lit(1)).alias("n")))
 
@@ -159,7 +154,7 @@ WHERE substring(md5(CAST(o_orderkey AS VARCHAR)), 1, 8) < '19999999'
 def q_sample_hash(spark, sf_dir):
     """Deterministic content-hash sampling (reproducible across engines and
     re-runs, unlike seeded rand — the scalable train/test-split primitive)."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     return S.sample_hash(orders, "o_orderkey", 0.1).select(
         "o_orderkey", "o_totalprice")
 
@@ -174,7 +169,7 @@ GROUP BY o_orderstatus
 def q_sample_stratified(spark, sf_dir):
     """Stratified deterministic sampling: per-class keep fractions
     (Data Sampler's stratified mode, owdatasampler.py)."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     s = S.sample_hash_stratified(
         orders, "o_orderkey", "o_orderstatus",
         {"F": 0.05, "O": 0.1, "P": 0.5})
@@ -190,7 +185,7 @@ FROM orders GROUP BY 1
 def q_cv_folds(spark, sf_dir):
     """Deterministic k-fold assignment by content hash — each row's fold is
     a pure function of its key (stable under re-partitioning/re-runs)."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     fold = F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),
                   16, 10).cast("long") % 5
     return (orders.withColumn("fold", fold.cast("int"))
@@ -230,7 +225,7 @@ def q_weighted_distribution(spark, sf_dir):
     here any numeric column can weight a distribution)."""
     from orange3_spark.stats.basic import weighted_distribution
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     return weighted_distribution(orders, "o_orderpriority", "o_totalprice")
 
 
@@ -246,7 +241,7 @@ def q_hstack(spark, sf_dir):
     (Table.concatenate(axis=1), table.py:1417-1439)."""
     from orange3_spark.operators.reshape import hstack
 
-    orders, li = _t(spark, sf_dir, "orders", "lineitem")
+    orders, li = fixtures(spark, sf_dir, "orders", "lineitem")
     agg = (li.groupBy(F.col("l_orderkey").alias("o_orderkey"))
              .agg(F.count(F.lit(1)).alias("li_count"),
                   F.sum("l_quantity").alias("li_qty")))
@@ -268,7 +263,7 @@ def q_feature_constructor(spark, sf_dir):
     row-at-a-time Python (the reference evaluates these per row)."""
     from orange3_spark.functions.feature_constructor import construct_feature
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     out = li.select("l_orderkey", "l_linenumber", "l_extendedprice",
                     "l_discount", "l_tax", "l_quantity")
     out = construct_feature(out, "charge",
@@ -288,7 +283,7 @@ FROM events
 def q_rolling_mean(spark, sf_dir):
     """Rolling frame aggregate over event time per user — beyond-reference
     window surface (SURVEY §2.6: windows are an extension, not a port)."""
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = fixtures(spark, sf_dir, "events")
     return W.with_rolling(events, "value", "mean",
                           ["user_id"], ["ts", "event_id"],
                           preceding=3, following=0,
@@ -397,7 +392,7 @@ def q_sketch_kmv(spark, sf_dir):
     from orange3_spark.stats.sketches import kmv_distinct
     from orange3_spark.text.dedup import shingle_table
 
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     # posexplode+lead shingling (dedup.shingle_table — HOF shingles()
     # are CodegenFallback, ~20x slower), then a broadcast id→source map
     sh = (shingle_table(docs, n=3)
@@ -448,7 +443,7 @@ def q_sketch_cms(spark, sf_dir):
     from orange3_spark.stats.sketches import cms_lanes, cms_point_estimates
     from orange3_spark.text.analysis import tokens
 
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     tok = docs.select(F.explode(tokens("text")).alias("tok"))
     table = cms_lanes(tok, "tok", width=1024, depth=4)
     est = cms_point_estimates(table, list(_CMS_PROBES),
@@ -518,7 +513,7 @@ def q_sketch_hll(spark, sf_dir):
     next to the exact distinct count for error context."""
     from orange3_spark.stats.sketches import hll_distinct
 
-    (ev,) = _t(spark, sf_dir, "events")
+    (ev,) = fixtures(spark, sf_dir, "events")
     est = hll_distinct(ev.select("event_type", "user_id"), "user_id",
                        group_by="event_type", p=8)
     true = (ev.groupBy("event_type")
@@ -559,7 +554,7 @@ def q_sketch_bloom(spark, sf_dir):
     broadcastable pre-filter for semi joins against a huge key set."""
     from orange3_spark.stats.sketches import bloom_buckets, bloom_probe
 
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = fixtures(spark, sf_dir, "part")
     table = bloom_buckets(part.select("p_partkey"), "p_partkey",
                           bits=8192, depth=4)
     probed = bloom_probe(table, list(_BLOOM_PROBES), bits=8192, depth=4)
@@ -609,7 +604,7 @@ def q_sketch_quantile(spark, sf_dir):
     from orange3_spark.stats.sketches import (quantile_bins,
                                               quantile_from_bins)
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     lo_hi = li.agg(F.min("l_extendedprice").alias("lo"),
                    F.max("l_extendedprice").alias("hi")).first()
     lo, hi = float(lo_hi["lo"]), float(lo_hi["hi"])
@@ -638,7 +633,7 @@ def q_cv_stratified(spark, sf_dir):
     round-robin — one PARTITIONED window, no global sort, pure function
     of row content.  Output is the (fold, stratum) census the balance
     guarantee is checked against."""
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = fixtures(spark, sf_dir, "customer")
     folded = S.cv_folds_stratified(cust.select("c_custkey", "c_mktsegment"),
                                    5, strata_col="c_mktsegment",
                                    key=["c_custkey"], salt="s")
@@ -677,7 +672,7 @@ def q_data_validation(spark, sf_dir):
     NULL predicate results count as violations."""
     from orange3_spark.stats.validation import validate
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = fixtures(spark, sf_dir, "lineitem")
     out = validate(li, {
         "quantity_in_range": (F.col("l_quantity") >= 1)
                              & (F.col("l_quantity") <= 50),
@@ -700,7 +695,7 @@ def q_drift_psi(spark, sf_dir):
     verbatim with the replay oracle — never engine libm)."""
     from orange3_spark.stats.validation import drift_psi
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = fixtures(spark, sf_dir, "orders")
     tab, psi_q = drift_psi(
         orders, "o_totalprice",
         F.col("o_orderdate") < F.lit("1995-06-17").cast("date"),

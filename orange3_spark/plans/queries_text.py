@@ -7,16 +7,10 @@ from pyspark.sql import functions as F
 
 from orange3_spark.plans import oracle_replay as OR2
 from orange3_spark.plans.queries_ml import lloyd_cte
-from orange3_spark.plans.registry import query
-from orange3_spark.session import load_tables
+from orange3_spark.plans.registry import fixtures, query
 from orange3_spark.similarity import knn as K
 from orange3_spark.text import analysis as TA
 from orange3_spark.text import dedup as TD
-
-
-def _t(spark, sf_dir, *names):
-    d = load_tables(spark, sf_dir, names)
-    return [d[n] for n in names]
 
 
 @query("q_text_stats", """
@@ -30,7 +24,7 @@ FROM documents
 def q_text_stats(spark, sf_dir):
     """Token/char counting over the documents table — pure JVM-side string
     expressions (token_count/char_count/avg_token_len)."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         TA.token_count("text").alias("n_tokens"),
@@ -50,7 +44,7 @@ FROM documents
 def q_text_quality(spark, sf_dir):
     """Quality-signal components: punctuation ratio + stopword density
     (Gopher/C4-style signals as Column expressions)."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         TA.punct_ratio("text").alias("punct_ratio"),
@@ -80,7 +74,7 @@ GROUP BY predicted_lang
 def q_lang_id(spark, sf_dir):
     """n-gram/marker language-ID heuristic: argmax of per-language function-
     word density, alphabetical tie-break, 'und' when nothing fires."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     return (TA.lang_id_frame(docs, "text")
               .groupBy("predicted_lang")
               .agg(F.count(F.lit(1)).alias("n")))
@@ -96,7 +90,7 @@ SELECT doc_id, n_copies FROM (
 def q_dedup_exact(spark, sf_dir):
     """Exact dedup (hash-groupBy on normalized text): doubled corpus
     collapses back to one survivor per text, lowest id wins."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     doubled = docs.select("doc_id", "text").unionByName(
         docs.select((F.col("doc_id") + 1000000).alias("doc_id"), "text"))
     return TD.dedup_exact(doubled)
@@ -117,7 +111,7 @@ WHERE inter / (sa.sz + sb.sz - inter) >= 0.2
 def q_dedup_jaccard(spark, sf_dir):
     """n-gram Jaccard near-dup pairs via the shingle self-join (candidates
     only for docs sharing ≥1 shingle — never the O(n²) cross join)."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     return TD.jaccard_pairs(docs, n=3, threshold=0.2)
 
 
@@ -166,7 +160,7 @@ def q_dedup_minhash(spark, sf_dir):
     join, verification) is oracle-checked.  The xxhash64 production family
     is identical machinery (~2-3× faster) and is recall-asserted vs exact
     jaccard_pairs in tests."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     return TD.dedup_minhash(docs, num_hashes=_MH_K, bands=_MH_BANDS,
                             threshold=0.2, seed=0, hash_family="md5")
 
@@ -193,7 +187,7 @@ def q_dedup_incremental(spark, sf_dir):
     the probe is an equi-join that shuffles only the new batch when the
     index is stored bucketed on (band, bucket).  md5 family so the oracle
     replays the exact index + probe."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     # Signatures are PER-DOCUMENT (the property the incremental claim
     # rests on), so the batch and index band rows are the same rows a
     # single corpus-wide band table yields — build the signature
@@ -244,7 +238,7 @@ def q_dedup_simhash(spark, sf_dir):
     ``md5(token)`` hex chars and the Hamming filter char-by-char.  The
     xxhash64 production variant (bit-parallel XOR + bit_count) is the same
     algorithm, pytest-covered."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     return TD.simhash_near_dups_md5(docs, max_hamming=12, prefix_bits=8)
 
 
@@ -260,7 +254,7 @@ LIMIT 5
 def q_knn_cosine(spark, sf_dir):
     """Brute-force cosine top-k (the Neighbors widget shape,
     owneighbors.py): query vector folded into the plan, one scan."""
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     return K.knn_brute_force(emb.filter(F.col("vec_id") != 0),
                              [float(x) for x in qv], k=5)
@@ -278,7 +272,7 @@ def q_neardup_cosine(spark, sf_dir):
     """Embedding-cosine near-dup pairs: broadcast-matmul brute force (one
     n·d broadcast + per-partition BLAS; LSH is the unbounded-scale path,
     tested for recall in tests)."""
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     return K.neardup_cosine_matmul(emb, threshold=0.4)
 
 
@@ -297,7 +291,7 @@ def q_neardup_cosine_scaled(spark, sf_dir):
     from orange3_spark.plans.oracle_replay import (NEARDUP_QSCALE,
                                                    NEARDUP_SCALED)
 
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     P = NEARDUP_SCALED
     pairs = K.neardup_cosine(emb.where(F.col("embedding").isNotNull()),
                              threshold=-1.0, n_planes="auto",
@@ -319,7 +313,7 @@ SELECT shingle, df FROM counts ORDER BY df DESC, shingle LIMIT 20
 def q_top_ngrams(spark, sf_dir):
     """Corpus-wide top-20 bigrams by document frequency (vocabulary /
     boilerplate probe): shingle explode + one combined count shuffle."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     return TA.top_ngrams(docs, n=2, k=20)
 
 
@@ -334,7 +328,7 @@ FROM documents
 def q_redact(spark, sf_dir):
     """PII scrubbing pass (emails → phones → numbers) — ordered row-local
     regexp chain; output fingerprinted for the compare."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     return docs.select("doc_id", F.md5(TA.redact("text")).alias("fp"))
 
 
@@ -366,7 +360,7 @@ def q_dup_clusters(spark, sf_dir):
     """Near-dup CLUSTERS: connected components over the Jaccard pair graph
     (driver union-find under DRIVER_CC_MAX_EDGES — the path this data
     size takes); the oracle is a recursive CTE."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     pairs = TD.jaccard_pairs(docs, n=3, threshold=0.2)
     return TD.dup_clusters(pairs)
 
@@ -379,7 +373,7 @@ def q_dup_clusters_distributed(spark, sf_dir):
     at 100 TB, hash-graded against the same recursive-CTE oracle so the
     scale path has first-class correctness evidence, not just the
     driver union-find shortcut."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     pairs = TD.jaccard_pairs(docs, n=3, threshold=0.2)
     return TD.dup_clusters(pairs, driver_max_edges=0)
 
@@ -419,7 +413,7 @@ def q_leakage_safe_split(spark, sf_dir):
     and inflate eval.  Oracle replays components (recursive CTE) + the md5
     threshold split exactly."""
     from orange3_spark.text.pipeline import leakage_safe_split_labeled
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     pairs = TD.jaccard_pairs(docs, n=3, threshold=0.2)
     # single lineage (guide §1.2): the two-frame view would run the
     # docs⋈clusters broadcast join + doc scan once per unioned branch;
@@ -437,7 +431,7 @@ FROM documents
 def q_fingerprint(spark, sf_dir):
     """Content fingerprint — md5 variant for cross-engine comparability
     (engine default is xxhash64, same plumbing)."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     return docs.select(
         "doc_id", F.md5(F.array_join(TA.tokens("text"), " ")).alias("fp"))
 
@@ -476,7 +470,7 @@ def q_knn_ivf(spark, sf_dir):
     refresh, and every distance run on the integer grid (exact int64
     sums), so the whole pipeline is oracle-replayed bit-for-bit."""
     from orange3_spark.similarity.knn import ivf_knn
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     out = ivf_knn(emb, emb.where(F.col("vec_id") < 3), k=3,
                   n_cells=8, nprobe=2, n_iter=2)
     return (out.select("qid", "rank", "id_b",
@@ -512,7 +506,7 @@ def q_fingerprint_winnow(spark, sf_dir):
     bigint windowed min (text/dedup.py:winnow_fingerprints).  Per-doc
     fingerprint count + hash/pos checksums pin the exact selection; the
     engine-portable md5 family makes the full pipeline oracle-checkable."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     fp = TD.winnow_fingerprints(docs, k=3, w=4, hash_family="md5")
     return (fp.groupBy("doc_id")
               .agg(F.count(F.lit(1)).alias("n_fp"),
@@ -541,7 +535,7 @@ def q_dedup_semantic(spark, sf_dir):
     vectors."""
     from orange3_spark.similarity.knn import semantic_dedup
 
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     out = semantic_dedup(emb, "vec_id", "embedding", k=8, n_iter=2,
                          threshold=0.4)
     return out.select("id_a", "id_b", "cluster",
@@ -574,7 +568,7 @@ def q_text_repetition(spark, sf_dir):
     (text/analysis.py:repetition_stats).  Pure grouped counts + a per-doc
     window over the count table; exact integer ratios, so the oracle
     hash-matches bit-for-bit."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     return TA.repetition_stats(docs, n=2)
 
 
@@ -602,7 +596,7 @@ def q_decontaminate(spark, sf_dir):
     benchmark."""
     from orange3_spark.text.pipeline import decontaminate
 
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     train = docs.where(F.col("doc_id") % 20 != 0)
     bench = docs.where(F.col("doc_id") % 20 == 0)
     _, contaminated = decontaminate(train, bench, n=5)
@@ -675,7 +669,7 @@ def q_training_pipeline(spark, sf_dir):
     shared pipeline.)"""
     from orange3_spark.text.pipeline import prepare_training_data_labeled
 
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     # seed=0 matches the shared _MH_AGGS oracle family (h1 + k*h2);
     # the engine's default seed=42 is a DIFFERENT (equally valid) family
     # whose banding misses a different set of borderline pairs — caught
@@ -700,7 +694,7 @@ def q_text_bm25(spark, sf_dir):
     from orange3_spark.text.bm25 import bm25_scores
 
     P = OR2.BM25_PARAMS
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     scored = bm25_scores(docs, list(P["terms"]), k1=P["k1"], b=P["b"])
     return (scored.select(
                 "doc_id", "doc_len",
@@ -723,7 +717,7 @@ def q_mix_sources(spark, sf_dir):
     from orange3_spark.text.pipeline import mix_sources
 
     P = OR2.MIX_PARAMS
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     kept = mix_sources(docs, P["target"], salt=P["salt"])
     return (kept.groupBy("source")
             .agg(F.count(F.lit(1)).alias("n"),
@@ -760,7 +754,7 @@ def q_pack_sequences(spark, sf_dir):
     window cumsum and the floor split in SQL."""
     from orange3_spark.text.packing import pack_sequences
 
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     packed = pack_sequences(docs, target_tokens=512, n_buckets=16)
     return (packed.groupBy("bucket")
             .agg(F.countDistinct("seq_id").alias("n_seqs"),
@@ -800,7 +794,7 @@ def q_repeated_spans(spark, sf_dir):
     The oracle replays the shingle/df/join CTEs in SQL."""
     from orange3_spark.text.dedup import repeated_span_stats
 
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     stats = repeated_span_stats(docs, n=5, min_df=2)
     return stats.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -831,7 +825,7 @@ def q_hard_negatives(spark, sf_dir):
     (score desc, id).  The oracle replays the full different-label join
     + ranked window in SQL; raw-score doubles survive the driver's
     canonicalization."""
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     return K.hard_negatives(emb, k=3)
 
 
@@ -873,7 +867,7 @@ def q_hard_negatives_blocked(spark, sf_dir):
     one divide over two sqrts), so the approximate pipeline is
     nonetheless bit-replayable — the oracle re-runs fit, centroid
     refresh, probe selection, and scoring in SQL."""
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     out = K.hard_negatives_blocked(emb, k=3, n_cells=8, nprobe=2,
                                    n_iter=2)
     return out.orderBy("vec_id", "neg_id")
@@ -919,7 +913,7 @@ def q_lm_score(spark, sf_dir):
     model and rescores the corpus."""
     from orange3_spark.text.lm import bigram_lm_scores
 
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     lm = bigram_lm_scores(docs, train_filter=F.col("lang") == "en")
     return (docs.join(lm, "doc_id", "left")
             .groupBy("source")
@@ -992,7 +986,7 @@ def q_pq_codes(spark, sf_dir):
     four sub-quantizers from scratch in SQL (``_pq_cte``)."""
     from orange3_spark.similarity.pq import pq_fit
 
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     encoded, _ = pq_fit(emb, "vec_id", array_col="embedding",
                         m=4, k=16, n_iter=2)
     out = (encoded.selectExpr("vec_id",
@@ -1034,7 +1028,7 @@ def q_pq_adc(spark, sf_dir):
     from the assignment + centroid tables."""
     from orange3_spark.similarity.pq import pq_adc_topk, pq_fit
 
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     qv = emb.where(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     encoded, cents = pq_fit(emb, "vec_id", array_col="embedding",
                             m=4, k=16, n_iter=2)
@@ -1097,7 +1091,7 @@ def q_ivfpq(spark, sf_dir):
     replays probe selection + every ADC lookup."""
     from orange3_spark.similarity.pq import ivfpq_topk
 
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     qv = emb.where(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     return ivfpq_topk(emb, qv, id_col="vec_id", array_col="embedding",
                       n_cells=16, nprobe=4, m=4, k=16, n_iter=2, topn=10)
@@ -1131,7 +1125,7 @@ def q_corpus_report(spark, sf_dir):
     value an exact integer, mirrored term-for-term in SQL."""
     from orange3_spark.text.pipeline import corpus_report
 
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     return corpus_report(docs).orderBy("source")
 
 
@@ -1188,7 +1182,7 @@ def q_bpe_vocab(spark, sf_dir):
     oracle refits the full merge chain from scratch (``_bpe_cte``)."""
     from orange3_spark.text.bpe import bpe_fit
 
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     merges, words = bpe_fit(docs, n_merges=8)
     words.bpe_cache.unpersist()        # merges are collected constants
     return spark.createDataFrame(
@@ -1223,7 +1217,7 @@ def q_bpe_tokenize(spark, sf_dir):
     refits the chain and recounts every segmentation in SQL."""
     from orange3_spark.text.bpe import bpe_apply, bpe_fit
 
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     merges, words = bpe_fit(docs, n_merges=8)
     words.bpe_cache.unpersist()
     return (bpe_apply(docs, merges, keep=("source",))
@@ -1246,7 +1240,7 @@ def q_quality_classifier(spark, sf_dir):
         quality_clf_fit, quality_clf_score)
 
     P = OR2.QCLF_PARAMS
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     beta = quality_clf_fit(docs, F.col("lang") == P["label_lang"],
                            n_buckets=P["n_buckets"],
                            sample_thr=P["thr"], iters=P["iters"])
@@ -1307,7 +1301,7 @@ def q_cdc_chunks(spark, sf_dir):
     >1 instance corpus-wide).  Boundary selection, chunk hashes and all
     counts are exact md5-integer arithmetic — the oracle replays the
     full pipeline in windowed SQL."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     return (TD.cdc_chunk_stats(docs, k=3, divisor=8, group_col="source")
             .orderBy("source"))
 
@@ -1385,7 +1379,7 @@ def q_cluster_curation(spark, sf_dir):
     from orange3_spark.ml.cluster import kmeans_lloyd
     from orange3_spark.text.quality_clf import hashed_bow_agg
 
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     B = OR2.QCLF_PARAMS["n_buckets"]
     feats = hashed_bow_agg(docs, keep=("source",))
     pre = feats.select("doc_id", "source",
@@ -1421,7 +1415,7 @@ def q_mix_temperature(spark, sf_dir):
     from orange3_spark.text.pipeline import mix_temperature
 
     P = OR2.MIXT_PARAMS
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     kept = mix_temperature(docs, P["temperature"], salt=P["salt"])
     return (kept.groupBy("source")
             .agg(F.count(F.lit(1)).alias("n"),
@@ -1455,7 +1449,7 @@ def q_tfidf_terms(spark, sf_dir):
     tf·10⁶ div df; no libm, so the full ranking incl. ties is
     hash-graded).  One explode, two aggregations, one term equi-join,
     one partitioned top-5 window."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     return (TA.distinctive_terms(docs, top_n=5)
             .withColumn("rnk", F.col("rnk").cast("int"))
             .orderBy("source", "rnk"))
@@ -1490,7 +1484,7 @@ def q_sliding_chunks(spark, sf_dir):
     aggregate); the oracle replays slice geometry and hashes in SQL."""
     from orange3_spark.text.packing import sliding_chunks
 
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     ch = sliding_chunks(docs, window=32, stride=16, keep=("source",))
     return (ch.groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_chunks"),
@@ -1535,7 +1529,7 @@ def q_boilerplate(spark, sf_dir):
     al. 2022).  One gram-key shuffle with map-side combine; the
     thresholded boilerplate set joins back as a broadcast.  Counts are
     exact integers; the fraction is one integer division."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     return (TA.boilerplate_fraction(docs, n=5, min_docs=3)
             .orderBy("doc_id"))
 
@@ -1596,7 +1590,7 @@ def q_url_canonicalize(spark, sf_dir):
     domain rule exercises the two-level-suffix branch (example.co.uk)."""
     from orange3_spark.text.urls import canonicalize_url, registrable_domain
 
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     raw = docs.select(
         "doc_id",
         F.concat(F.lit("HTTPS://WWW."), F.upper("source"),
@@ -1641,7 +1635,7 @@ def q_embed_quantize(spark, sf_dir):
     floor(v+0.5) IEEE tree mirrored verbatim in SQL."""
     from orange3_spark.similarity.quantize import quantize_int8_summary
 
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     return quantize_int8_summary(emb).orderBy("vec_id")
 
 
@@ -1692,7 +1686,7 @@ def q_ann_recall(spark, sf_dir):
     bit-for-bit in SQL."""
     from orange3_spark.similarity.knn import ivf_fit, ivf_search
 
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") < 5)
     # ONE index build shared by both nprobe settings (the whole point
     # of the recall dial); the postings cache lives for the query, the
@@ -1752,7 +1746,7 @@ def q_line_dedup(spark, sf_dir):
     near-dup detection in web-corpus pipelines.  Duplicate body texts
     (the documents table contains exact dups) are removed too, which
     the oracle reproduces."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     multi = docs.select(
         "doc_id",
         F.concat(F.col("text"), F.lit("\nshared footer for "),
@@ -1792,7 +1786,7 @@ def q_random_projection(spark, sf_dir):
     the identical weight table embedded as literals."""
     from orange3_spark.similarity.quantize import random_projection
 
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     return (random_projection(emb, out_dim=8, seed=42, in_dim=64)
             .orderBy("vec_id", "j"))
 
@@ -1826,7 +1820,7 @@ def q_cooccurrence(spark, sf_dir):
     token pairs by exact-integer lift (the monotone PMI transform that
     needs no libm log), document-blocked pair join with df caps so hot
     tokens can't explode quadratically."""
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     return TA.cooccurrence_lift(docs, min_count=5, max_df=10_000,
                                 top_k=20)
 
@@ -1842,7 +1836,7 @@ def q_compression_ratio(spark, sf_dir):
     (plans/oracle_replay.compression_ratio_oracle)."""
     from orange3_spark.text.analysis import compression_ratio
 
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = fixtures(spark, sf_dir, "documents")
     out = compression_ratio(docs.where(F.col("text").isNotNull()))
     return (out.groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_docs"),
@@ -1883,7 +1877,7 @@ def q_ann_incremental(spark, sf_dir):
     by exact integer distance, ties toward the lower cell) dictates.
     The oracle refits the base quantizer, replays the centroid refresh,
     and re-derives every appended assignment in SQL."""
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = fixtures(spark, sf_dir, "embeddings")
     base = emb.where(F.col("vec_id") % 5 != 0)
     new = emb.where(F.col("vec_id") % 5 == 0)
     assigned, cents = K.ivf_fit(base, n_cells=8, n_iter=2)

@@ -15,6 +15,8 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from orange3_spark.session import load_tables
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 #: str, or a zero-arg callable producing the SQL lazily (replay oracles)
 ORACLE: dict[str, object] = {}
@@ -27,3 +29,9 @@ def query(name: str, sql=None):
             ORACLE[name] = sql
         return fn
     return deco
+
+
+def fixtures(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
+    """The named fixture tables of ``sf_dir``, in the order asked."""
+    d = load_tables(spark, sf_dir, names)
+    return [d[n] for n in names]

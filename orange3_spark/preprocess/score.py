@@ -172,10 +172,12 @@ def anova_f_multi(df: DataFrame, cont_vars: Sequence[str],
 def univariate_linear_regression_multi(df: DataFrame,
                                        cont_vars: Sequence[str],
                                        target_col: str) -> dict[str, float]:
-    """Univariate-regression F for MANY features vs one target in one
-    aggregation (same single-scan rationale as :func:`anova_f_multi`).
-    Per-feature NULL scope matches the single-column function: each
-    corr/count pair conditions on its own feature's non-NULLs."""
+    """Univariate linear-regression F-statistic for MANY continuous
+    features vs one continuous target in one aggregation (``score.py:142``
+    wraps sklearn ``f_regression``; same single-scan rationale as
+    :func:`anova_f_multi`): ``F = r² · (n − 2) / (1 − r²)`` with r the
+    Pearson correlation.  Each corr/count pair conditions on its own
+    feature's non-NULLs."""
     ok_t = F.col(target_col).isNotNull()
     aggs = []
     for i, c in enumerate(cont_vars):
@@ -192,22 +194,6 @@ def univariate_linear_regression_multi(df: DataFrame,
         else:
             out[c] = r * r / (1.0 - r * r) * (n - 2)
     return out
-
-
-def univariate_linear_regression(df: DataFrame, cont_var: str,
-                                 target_col: str) -> float:
-    """Univariate linear-regression F-statistic for a continuous feature vs
-    a continuous target (``score.py:142`` wraps sklearn ``f_regression``):
-    ``F = r² · (n − 2) / (1 − r²)`` with r the Pearson correlation — one
-    ``corr`` + ``count`` aggregate."""
-    row = (df.filter(F.col(cont_var).isNotNull()
-                     & F.col(target_col).isNotNull())
-             .agg(F.corr(cont_var, target_col).alias("r"),
-                  F.count(F.lit(1)).alias("n")).first())
-    r, n = row["r"], row["n"]
-    if r is None or n <= 2 or abs(r) >= 1.0:
-        return float("inf") if r is not None and abs(r) >= 1.0 else 0.0
-    return r * r / (1.0 - r * r) * (n - 2)
 
 
 def symmetric_uncertainty(df: DataFrame, a: str, b: str) -> float:

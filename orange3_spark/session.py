@@ -141,6 +141,38 @@ def get_spark(app_name: str = "orange3-spark", **extra_conf: str) -> SparkSessio
     return builder.getOrCreate()
 
 
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to default parallelism ONLY when the
+    input has fewer partitions — the unsplittable-input valve (guide
+    §2.5).  Single-row-group parquet scans arrive as ONE split, and
+    heavy per-row work on them (Python scoring, per-token hashing, kNN
+    distance blocks) otherwise runs single-threaded on a wide session.
+    At scale a real scan already has ≥ cores partitions and no exchange
+    is added.  Callers apply it only where downstream results are
+    partitioning-independent (exact-integer aggregations, row-local
+    projections)."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par)
+    return df
+
+
+def right_size(df: DataFrame, n_rows: int, *,
+               rows_per_task: int = 50_000) -> DataFrame:
+    """Coalesce a frame of ``n_rows`` rows to one partition per
+    ``rows_per_task`` rows, capped at default parallelism, ONLY when
+    that is fewer partitions than it has.  Iterative fits run one job
+    per iteration over EVERY partition, so a small fit frame on a wide
+    session pays iterations×parallelism near-empty task round-trips
+    (MLlib*, ICDE 2019); full parallelism returns at real row counts.
+    Nothing is persisted: the caller owns the cache of the result."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    parts = max(1, min(par, n_rows // rows_per_task + 1))
+    if parts < df.rdd.getNumPartitions():
+        return df.coalesce(parts)
+    return df
+
+
 #: lazy-frame memo keyed by (applicationId, path, mtime_ns, size).
 #: This caches SCHEMA RESOLUTION only — ``spark.read.parquet`` costs
 #: ~80 ms per call (py4j + JVM DataSource resolution + footer read),

@@ -286,11 +286,13 @@ def _lsh_buckets_udf(planes_tables, dim: int):
     ``concat_ws(':', t, lsh_signature(v, planes))`` projection —
     BIT-IDENTICAL strings: each plane projection is the ordered
     acc = acc + v[d]·plane[d] fold (float32→double casts are exact),
-    ``proj >= 0`` sets the plane's bit (NaN compares false, exactly as
-    the JVM), and rows whose length ≠ dim (or NULL rows) get signature
-    0 in every table — the value the JVM form produces when ``zip_with``
-    pads the short side with NULLs and ``when(NULL >= 0)`` falls through
-    to 0 for every bit."""
+    ``proj >= 0`` sets the plane's bit, and so does a NaN projection:
+    Spark orders NaN above every double, so ``NaN >= 0`` is true there
+    while numpy's is false, hence the ``~(acc < 0)`` form.  Rows whose
+    length ≠ dim (or NULL rows) get signature 0 in every table — the
+    value the JVM form produces when ``zip_with`` pads the short side
+    with NULLs and ``when(NULL >= 0)`` falls through to 0 for every
+    bit."""
     import numpy as np
 
     pmats = [np.asarray(p, dtype=np.float64) for p in planes_tables]
@@ -310,7 +312,7 @@ def _lsh_buckets_udf(planes_tables, dim: int):
                     acc = np.zeros(X.shape[0], dtype=np.float64)
                     for d in range(dim):
                         acc = acc + X[:, d] * P[i, d]
-                    s |= np.where(acc >= 0.0, np.int64(1 << i),
+                    s |= np.where(~(acc < 0.0), np.int64(1 << i),
                                   np.int64(0))
                 sigs[t, ok] = s
         return pd.Series(
@@ -393,13 +395,13 @@ def neardup_cosine(df: DataFrame, threshold: float = 0.95, *,
     # _seq_*/_lsh_buckets_udf docstrings) — the per-row F.aggregate folds
     # here are CodegenFallback (interpreted per element) and were this
     # query's dominant cost: n_tables·n_planes·dim interpreted lambda
-    # evals per row.  _spread_scan: that per-row work otherwise
+    # evals per row.  spread: that per-row work otherwise
     # serializes inside a 1-task scan stage on single-row-group inputs
     # (guide §2.5 unsplittable input; a no-op at scale where scans
     # already have ≥ cores splits) — signatures are row-local and the
     # candidate set is set-valued, so results are partitioning-
     # independent.
-    from orange3_spark.text.dedup import _spread_scan
+    from orange3_spark.session import spread
 
     dim = len(df.select(vec_col).first()[0])
     # deliberately NOT persisted: (id, vec, norm) has three consumers,
@@ -407,8 +409,8 @@ def neardup_cosine(df: DataFrame, threshold: float = 0.95, *,
     # materialization round-trip (measured 2.01 → 2.59 s with a
     # MEMORY_AND_DISK persist here — the same cache-loses-on-small-
     # frames result as r10's _nation_features experiment)
-    base = (_spread_scan(df.select(F.col(id_col).alias("_id"),
-                                   F.col(vec_col).alias("_v")))
+    base = (spread(df.select(F.col(id_col).alias("_id"),
+                             F.col(vec_col).alias("_v")))
             .withColumn("_n", _seq_norm_udf()(F.col("_v"))))
     if n_planes == "auto":
         n_planes = auto_n_planes(base.count())
@@ -416,7 +418,7 @@ def neardup_cosine(df: DataFrame, threshold: float = 0.95, *,
         [hyperplanes(dim, n_planes, seed + 7919 * t)
          for t in range(n_tables)], dim)
     tagged = base.select(
-        "_id", "_n", F.explode(buckets(F.col("_v"))).alias("bucket"))
+        "_id", F.explode(buckets(F.col("_v"))).alias("bucket"))
     # The bucket self-join and the multi-table dedup move ONLY ids:
     # shuffling the candidate pairs WITH their vectors through the
     # distinct moved two dim-length arrays per pair (measured the

@@ -29,10 +29,12 @@ import math
 from typing import Sequence
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from orange3_spark.ml.cluster import LLOYD_SCALE, quantize_array
+from orange3_spark.ml.cluster import LLOYD_SCALE, lloyd_probe, quantize_array
+from orange3_spark.session import right_size
 
 
 def _assign_codes_udf(cents):
@@ -73,8 +75,6 @@ def pq_fit(df: DataFrame, id_col: str, *, array_col: str,
     as already-integer-grid values (e.g. IVF residuals) verbatim."""
     import numpy as np
 
-    from orange3_spark.ml.cluster import rightsize_persist
-
     if pre_quantized:
         qdf = df.withColumn("_q", F.col(array_col).cast("array<bigint>"))
     else:
@@ -86,18 +86,15 @@ def pq_fit(df: DataFrame, id_col: str, *, array_col: str,
     # exact-int64 distances/argmin and the identical floor(Σ/n + 0.5)
     # update, so the codebooks — and the final distributed encoding —
     # are bit-identical.  Past the cap the job-per-round loop runs.
-    from orange3_spark.ml.cluster import LLOYD_LOCAL_CELLS, LLOYD_LOCAL_ROWS
-
-    prows = (qdf.select(id_col, "_q")
-             .limit(LLOYD_LOCAL_ROWS + 1).collect())
-    local = bool(prows and len(prows) <= LLOYD_LOCAL_ROWS
-                 and len(prows) * len(prows[0]["_q"]) <= LLOYD_LOCAL_CELLS)
+    prows = lloyd_probe(qdf.select(id_col, "_q"))
+    local = prows is not None
+    # same right-size + persist as kmeans_lloyd_fit
+    qdf = right_size(qdf, len(prows) if local else qdf.count()).persist(
+        StorageLevel.MEMORY_AND_DISK)
     if local:
-        qdf, _ = rightsize_persist(qdf, n_rows=len(prows))
         srt = sorted(prows, key=lambda r: r[id_col])
         first = [[int(x) for x in r["_q"]] for r in srt[:k]]
     else:
-        qdf, _ = rightsize_persist(qdf)
         first = [[int(x) for x in r["_q"]]
                  for r in qdf.select(id_col, "_q").orderBy(id_col).take(k)]
     if not first:

@@ -125,10 +125,10 @@ def write_dst(pairs: DataFrame, path: str, *, id_a: str = "id_a",
 
     sel = pairs.select(F.col(id_a).alias("_a"), F.col(id_b).alias("_b"),
                        F.col(dist_col).cast("double").alias("_d"))
-    if sel.limit(max_pairs + 1).count() > max_pairs:
+    rows = sel.limit(max_pairs + 1).collect()
+    if len(rows) > max_pairs:
         raise ValueError(f".dst writer is driver-side; > {max_pairs} "
                          "pairs. Use parquet for large matrices.")
-    rows = sel.collect()
     ids = sorted({r["_a"] for r in rows} | {r["_b"] for r in rows})
     pos = {v: k for k, v in enumerate(ids)}
     n = len(ids)
@@ -288,10 +288,10 @@ def write_dst_xlsx(pairs: DataFrame, path: str, *, id_a: str = "id_a",
 
     sel = pairs.select(F.col(id_a).alias("_a"), F.col(id_b).alias("_b"),
                        F.col(dist_col).cast("double").alias("_d"))
-    if sel.limit(max_pairs + 1).count() > max_pairs:
+    rows = sel.limit(max_pairs + 1).collect()
+    if len(rows) > max_pairs:
         raise ValueError(f".dst xlsx writer is driver-side; > {max_pairs} "
                          "pairs. Use parquet for large matrices.")
-    rows = sel.collect()
     ids = sorted({r["_a"] for r in rows} | {r["_b"] for r in rows})
     pos = {v: k for k, v in enumerate(ids)}
     tri = [[None] * i for i in range(len(ids))]   # strict lower triangle

@@ -25,28 +25,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import spread
 from orange3_spark.text.analysis import tokens
 
 
 # ---------------------------------------------------------------- exact dedup
-
-def _spread_scan(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to default parallelism ONLY when the
-    input has fewer partitions — the unsplittable-input valve (guide
-    §2.5).  At scale a real scan already has ≥ cores partitions and no
-    exchange is added; locally it keeps per-token hash work off a
-    1-task scan stage.  Callers apply it only where downstream results
-    are partitioning-independent (exact-integer aggregations, row-local
-    projections)."""
-    sc = df.sparkSession.sparkContext
-    try:
-        parts = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - defensive
-        return df
-    if parts < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
-    return df
-
 
 def dedup_exact(df: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id", *, normalize: bool = True) -> DataFrame:
@@ -529,29 +512,6 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def simhash_table_md5(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", *, bits: int = 64) -> DataFrame:
-    """SimHash signature from the first ``bits/4`` hex chars of
-    ``md5(token)`` — the engine-portable hash family (production default is
-    :func:`simhash_table`'s xxhash64).  Output is a ``bits``-char '0'/'1'
-    string, MSB first, so an SQL oracle can rebuild it char-for-char.
-    Same plan shape: explode tokens → ``bits`` conditional-sum vote
-    aggregates (all codegen, map-side combined), one shuffle on id."""
-    tok = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("_t"))
-    hx = F.md5(F.col("_t"))
-    votes = []
-    for b in range(bits):
-        ci = b // 4 + 1              # 1-based hex char position
-        shift = 3 - b % 4            # bit within the char, MSB first
-        val = F.conv(F.substring(hx, ci, 1), 16, 10).cast("int")
-        bit = F.shiftright(val, shift).bitwiseAND(F.lit(1))
-        votes.append(F.sum(F.when(bit == 1, 1).otherwise(-1)).alias(f"v{b}"))
-    agg = tok.groupBy(id_col).agg(*votes)
-    sig = F.concat(*[F.when(F.col(f"v{b}") > 0, F.lit("1")).otherwise(F.lit("0"))
-                     for b in range(bits)])
-    return agg.select(F.col(id_col), sig.alias("sh_bits"))
-
-
 def simhash_near_dups_md5(df: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id", *, max_hamming: int = 8,
                           prefix_bits: int = 16, bits: int = 64) -> DataFrame:
@@ -569,10 +529,10 @@ def simhash_near_dups_md5(df: DataFrame, text_col: str = "text",
     # fixtures scan as ONE split, guide §2.5): the per-token md5 + 16
     # hex-char parses below otherwise run fused into a 1-task scan
     # stage (measured 2.1 s of a 4.0 s query).  Round-robin of the raw
-    # doc rows is a no-op at scale (gate: partitions <
-    # defaultParallelism) and the per-doc vote sums are exact integers,
-    # identical under any partitioning.
-    df = _spread_scan(df)
+    # doc rows is a no-op at scale (session.spread's gate) and the
+    # per-doc vote sums are exact integers, identical under any
+    # partitioning.
+    df = spread(df)
     tok = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("_t"))
     hx = F.md5(F.col("_t"))
     # SIMD-in-a-register vote counting: each hex char carries 4 signature

@@ -92,11 +92,11 @@ def hashed_bow_agg(docs: DataFrame, *, text_col: str = "text",
     slice never amortizes.  Costs one shuffle, so the full-corpus
     SCORING path keeps the stateless row-local `hashed_bow` (also the
     streamable one)."""
-    from orange3_spark.text.dedup import _spread_scan
+    from orange3_spark.session import spread
 
     # spread a 1-split scan before the per-token md5 work (no-op at
     # scale; per-doc counts are exact ints, partitioning-independent)
-    tok = (_spread_scan(docs.where(F.col(text_col).isNotNull()))
+    tok = (spread(docs.where(F.col(text_col).isNotNull()))
            .select(*keep, id_col, F.explode(tokens(text_col)).alias("_t")))
     bk = _bucket(F.col("_t"), n_buckets)
     n = F.count(F.lit(1))

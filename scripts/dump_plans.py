@@ -25,10 +25,10 @@ def main() -> None:
     tag = sys.argv[1]
     names = sys.argv[2:]
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(HERE, "plans",
-                           os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r11"))
+    rnd = os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r11")
+    out_dir = os.path.join(HERE, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("dump-plans-r10")
+    spark = get_spark(f"dump-plans-{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
     qmap = entry_mod.queries()
     for name in names:

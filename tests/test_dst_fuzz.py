@@ -200,3 +200,16 @@ def test_dst_xlsx_nan_reads_none(spark, tmp_path):
             for r in read_dst_xlsx(spark, path).collect()}
     assert back[(1, 0)] is None
     assert back[(2, 0)] == 3.5 and back[(2, 1)] == 1.25
+
+
+@pytest.mark.parametrize("writer", [write_dst, write_dst_xlsx])
+def test_dst_writers_pair_cap(spark, tmp_path_factory, writer):
+    """The driver-side writers take exactly ``max_pairs`` pairs and
+    refuse one more, naming the cap."""
+    rows = [(i, j, float(i + j)) for i in range(1, 4) for j in range(i)]
+    pairs = spark.createDataFrame(rows, "id_a int, id_b int, dist double")
+    path = str(tmp_path_factory.mktemp("dstcap") / "m")
+    writer(pairs, path, labels={v: f"r{v}" for v in range(4)},
+           max_pairs=len(rows))
+    with pytest.raises(ValueError, match=f"> {len(rows) - 1} pairs"):
+        writer(pairs, path, max_pairs=len(rows) - 1)

@@ -730,25 +730,6 @@ def test_cv_logreg_matches_driver_irls(spark):
         assert r["ca"] > r["majority_share"] - 0.05
 
 
-def test_right_size_for_fit(spark):
-    """Small assembled training sets coalesce to one partition (no
-    iterations×parallelism empty-task scheduling); the partition count
-    never exceeds the session's default parallelism."""
-    from orange3_spark.ml.learners import right_size_for_fit
-
-    small = spark.range(1000).repartition(16)
-    sized = right_size_for_fit(small)
-    assert sized.rdd.getNumPartitions() == 1
-    assert sized.count() == 1000
-    sized.unpersist()
-
-    mid = spark.range(100_000).repartition(16)
-    sized = right_size_for_fit(mid, rows_per_task=10_000)
-    got = sized.rdd.getNumPartitions()
-    assert 1 < got <= spark.sparkContext.defaultParallelism
-    sized.unpersist()
-
-
 def test_regression_scores_one_pass_matches_per_metric(spark):
     """The one-scan bundle returns the same values as the per-metric
     functions (which each run their own action)."""

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from orange3_spark.operators.filters import ContinuousOps, FilterContinuous
@@ -344,3 +344,35 @@ def test_jpeg_lossless_roundtrip_property(h, w, seed, predictor, bits,
     blob = encode_jpeg_lossless(img, predictor=predictor, bits=bits,
                                 interleaved=interleaved)
     assert np.array_equal(decode_jpeg(blob), img)
+
+
+_vec_elems = st.one_of(
+    st.sampled_from([float("nan"), float("inf"), float("-inf"), 0.0, -0.0]),
+    st.floats(-10, 10, allow_nan=False))
+
+
+@settings(max_examples=10, deadline=None)
+@given(vecs=st.lists(st.one_of(st.none(),
+                               st.lists(_vec_elems, min_size=2, max_size=4)),
+                     min_size=1, max_size=12),
+       seed=st.integers(0, 1000))
+@example(vecs=[[float("nan"), 1.0, -2.0], [1.0, 2.0, 3.0]], seed=0)
+def test_lsh_buckets_udf_matches_jvm_signature(spark, vecs, seed):
+    """The vectorized LSH bucket UDF sets exactly the bits of the JVM
+    ``lsh_signature`` fold for any vector: a NaN projection sets its bit
+    (Spark orders NaN above every double), ±inf and ±0 follow IEEE, and
+    NULL or wrong-length rows get signature 0 in every table."""
+    from orange3_spark.similarity.knn import (_lsh_buckets_udf, hyperplanes,
+                                              lsh_signature)
+
+    dim = 3
+    tables = [hyperplanes(dim, 5, seed + 7919 * t) for t in range(2)]
+    df = spark.createDataFrame(list(enumerate(vecs)),
+                               "id int, v array<double>")
+    jvm = F.array(*[F.concat_ws(":", F.lit(str(t)),
+                                lsh_signature("v", P).cast("string"))
+                    for t, P in enumerate(tables)])
+    rows = df.select("id", _lsh_buckets_udf(tables, dim)(F.col("v"))
+                     .alias("udf"), jvm.alias("jvm")).collect()
+    for r in rows:
+        assert r.udf == r.jvm, (vecs[r.id], r.udf, r.jvm)
