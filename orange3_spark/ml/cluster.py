@@ -1,4 +1,5 @@
-"""Clustering + projection: KMeans / BisectingKMeans / PCA on MLlib.
+"""Clustering + projection: KMeans / PCA on MLlib, and the integer-grid
+Lloyd core shared by deterministic k-means, IVF and PQ.
 
 Reference: ``Orange/clustering/kmeans.py`` (sklearn KMeans wrap),
 ``Orange/projection/pca.py``.  Hierarchical/t-SNE/MDS are driver-local in
@@ -120,106 +121,195 @@ def lloyd_probe(frame: DataFrame, q_col: str = "_q"):
     return None
 
 
-def _lloyd_local_rounds(prows, id_col: str, k: int, n_iter: int):
-    """The Lloyd iteration loop run on a probe-fetched row list — the
-    distributed loop's LOCAL TWIN, bit-identical by construction: ``_q``
-    is already Spark-quantized, init is the k smallest ids (same
-    ``orderBy(id).take(k)`` rule), assignment is the same
-    ``exact_sq_dists`` + ``np.argmin`` (exact integers, same low-index
-    tie-break), sufficient statistics are exact int64 coordinate sums
-    (order-independent), and the centroid update is the identical
-    ``floor(Σ/n + 0.5)`` on Python ints.  Returns the final centroid
-    list; the final assignment still runs distributed on the SAME rule,
-    so downstream consumers see exactly what the job-per-round loop
-    produced."""
-    import math
+# --------------------------------------------- the integer-grid Lloyd core
+#
+# k-means (one codebook), IVF (k-means + one more update + top-nprobe
+# probes) and PQ (m codebooks over m equal dimension slices) share ONE
+# rule: nearest cell by exact integer distance with ties toward the
+# lower cell, exact integer sufficient statistics, and the
+# floor(Σ/n + 0.5) centroid update.  It is written only here.
 
+def nearest_cells(X, books, nprobe: int = 1):
+    """Nearest cells of the int rows ``X`` (n×dim): ``books[j]`` is the
+    codebook of the j-th of ``m = len(books)`` equal dimension slices
+    (m = 1 for k-means and IVF, m > 1 for PQ's sub-quantizers).
+    Returns (n, m·nprobe) int32 cell positions — per slice the
+    ``nprobe`` nearest by :func:`exact_sq_dists`, nearest first, ties
+    toward the lower position (``argmin``; a stable ``argsort`` for
+    ``nprobe > 1``), the oracles' ``ORDER BY dist, cl``."""
     import numpy as np
 
-    srt = sorted(prows, key=lambda r: r[id_col])
-    centroids = [[int(x) for x in r["_q"]] for r in srt[:k]]
-    dim = len(centroids[0])
-    X = np.asarray([r["_q"] for r in prows], dtype=np.int64)
-    for _ in range(n_iter - 1):
-        cl = np.argmin(exact_sq_dists(X, np.asarray(centroids,
-                                                    dtype=np.int64)),
-                       axis=1)
+    X = np.asarray(X, dtype=np.int64)
+    sub = X.shape[1] // len(books)
+    out = []
+    for j, book in enumerate(books):
+        d = exact_sq_dists(X[:, j * sub:(j + 1) * sub], book)
+        out.append(np.argmin(d, axis=1)[:, None] if nprobe == 1
+                   else np.argsort(d, axis=1, kind="stable")[:, :nprobe])
+    return np.concatenate(out, axis=1).astype(np.int32)
+
+
+def nearest_cells_udf(books, nprobe: int = 1, cell_ids=None):
+    """:func:`nearest_cells` as an Arrow-batched ``array<int>`` pandas
+    UDF over a quantized ``array<bigint>`` column.  The codebooks
+    (m·k·dim/m ints) ride in the closure, so assignment is one scan —
+    no join, no shuffle, one BLAS matmul per batch instead of n·k·dim
+    interpreted fold steps.  ``cell_ids`` maps positions to the ids of
+    a centroid table."""
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
+
+    books = [np.asarray(b, dtype=np.int64) for b in books]
+    ids = None if cell_ids is None else np.asarray(cell_ids, dtype=np.int32)
+
+    @pandas_udf("array<int>")
+    def _cells(s: pd.Series) -> pd.Series:
+        if not len(s):
+            return pd.Series([], dtype=object)
+        got = nearest_cells(np.stack([np.asarray(v, dtype=np.int64)
+                                      for v in s]), books, nprobe)
+        return pd.Series(list(got if ids is None else ids[got]))
+
+    return _cells
+
+
+def _suff_stats(X, codes, with_ss: bool = False) -> list:
+    """Per-cell sufficient statistics of the int rows ``X`` under their
+    (n, m) cells ``codes``: one ``{cell: (n, Σx_j, Σ|x_j|²)}`` dict per
+    slice j.  Coordinate sums are int64 (exact: |q|·rows ≪ 2⁶³); a
+    row's |x|² fits int64 (dim·q_max² ≈ 2.2e13) but their sum may not,
+    so squared norms add as Python ints.  Integer sums are order- and
+    partition-independent, so batch results add up to the same values
+    under any split."""
+    import numpy as np
+
+    sub = X.shape[1] // codes.shape[1]
+    out = []
+    for j in range(codes.shape[1]):
+        Xj, cj = X[:, j * sub:(j + 1) * sub], codes[:, j]
         got = {}
-        for c in np.unique(cl):
-            m = cl == c
-            n = int(m.sum())
-            s = X[m].sum(axis=0)
-            got[int(c)] = [math.floor(int(s[j]) / n + 0.5)
-                           for j in range(dim)]
-        centroids = [got.get(i, c) for i, c in enumerate(centroids)]
-    return centroids
+        for c in np.unique(cj):
+            Xc = Xj[cj == c]
+            ss = int((Xc * Xc).sum(axis=1).astype(object).sum()) \
+                if with_ss else 0
+            got[int(c)] = (len(Xc), Xc.sum(axis=0), ss)
+        out.append(got)
+    return out
 
 
-def _cluster_suff_stats(assigned: DataFrame, *, q_col: str = "_q",
-                        cluster_col: str = "cluster",
-                        with_ss: bool = False) -> dict:
-    """Per-cluster sufficient statistics ``{cluster: (n, Σq[, Σ|q|²])}``
-    in ONE Arrow-batched scan with EXACT integer accumulation.
+def _add_stats(into: list, part: list) -> list:
+    """Add ``part``'s per-slice cell statistics into ``into`` (exact)."""
+    for acc, got in zip(into, part):
+        for c, (n, s, ss) in got.items():
+            a_n, a_s, a_ss = acc.get(c, (0, 0, 0))
+            acc[c] = (a_n + n, a_s + s, a_ss + ss)
+    return into
+
+
+def _cluster_suff_stats(frame: DataFrame, *, q_col: str = "_q",
+                        cluster_col: str = "cluster", books=None,
+                        with_ss: bool = False) -> list:
+    """:func:`_suff_stats` of a distributed frame in ONE Arrow-batched
+    scan.  With ``books`` every row's cells in all m slices are scored
+    in the same scan (:func:`nearest_cells`), so one Lloyd round is one
+    job; without, the cell is read from ``cluster_col`` (m = 1).
 
     Replaces a ``groupBy().agg(sum(getItem(j)) for j in dim)`` — whose
     64-wide expression tree costs seconds of driver analysis + codegen
-    per call (the dominant cost of the Lloyd loop on small data) — with
-    a mapInPandas partial-aggregation: per-partition int64 coordinate
-    sums (exact: |q|·rows ≪ 2⁶³) and Python-int squared-norm sums
-    (arbitrary precision, shipped as strings), combined on the driver
-    with exact integer addition — order- and partition-independent, same
-    values the wide agg produced."""
+    per call — with per-partition partial statistics (squared-norm sums
+    shipped as strings) added on the driver with exact integer
+    arithmetic: the same values under any partitioning."""
     import numpy as np
 
+    if books is not None:
+        books = [np.asarray(b, dtype=np.int64) for b in books]
+    m = 1 if books is None else len(books)
+
     def _suff(it):
-        acc: dict = {}
+        acc = [{} for _ in range(m)]
         for pdf in it:
             if not len(pdf):
                 continue
             X = np.stack([np.asarray(v, dtype=np.int64)
                           for v in pdf[q_col]])
-            cl = pdf[cluster_col].to_numpy()
-            for c in np.unique(cl):
-                m = cl == c
-                Xc = X[m]
-                a = acc.setdefault(int(c),
-                                   [0, np.zeros(X.shape[1],
-                                                dtype=np.int64), 0])
-                a[0] += int(m.sum())
-                a[1] += Xc.sum(axis=0)
-                if with_ss:
-                    # per-row |q|² fits int64 (dim·q_max² ≈ 2.2e13);
-                    # the PARTITION sum may not — accumulate object ints
-                    rs = (Xc * Xc).sum(axis=1)
-                    a[2] += int(rs.astype(object).sum())
-        rows = {"cl": [], "n": [], "s": [], "ss": []}
-        for c, (n, s, ss) in acc.items():
-            rows["cl"].append(c)
-            rows["n"].append(n)
-            rows["s"].append(s.tolist())
-            rows["ss"].append(str(ss))
-        # an EMPTY partition must yield nothing: pd.DataFrame({"s": []})
-        # types the list column float64 and Arrow refuses the cast to
-        # array<long> (NumPyConverter has no list path) — latent until a
-        # coalesced fit left a task with zero rows
-        if rows["cl"]:
-            yield pd.DataFrame(rows)
+            codes = (pdf[cluster_col].to_numpy()[:, None] if books is None
+                     else nearest_cells(X, books))
+            _add_stats(acc, _suff_stats(X, codes, with_ss))
+        rows = [(j, c, n, s.tolist(), str(ss))
+                for j, got in enumerate(acc) for c, (n, s, ss) in got.items()]
+        # an EMPTY partition must yield nothing: a frame built from no
+        # rows types the list column float64 and Arrow refuses the cast
+        # to array<long> (NumPyConverter has no list path)
+        if rows:
+            yield pd.DataFrame(rows, columns=["j", "cl", "n", "s", "ss"])
 
-    parts = (assigned.select(q_col, cluster_col)
-             .mapInPandas(_suff, "cl long, n long, s array<long>, "
+    cols = [q_col] if books is not None else [q_col, cluster_col]
+    parts = (frame.select(*cols)
+             .mapInPandas(_suff, "j int, cl long, n long, s array<long>, "
                                  "ss string")
              .collect())
+    out = [{} for _ in range(m)]
+    for r in parts:
+        n, s, ss = out[r["j"]].get(r["cl"], (0, 0, 0))
+        out[r["j"]][r["cl"]] = (n + r["n"],
+                                s + np.asarray(r["s"], dtype=np.int64),
+                                ss + int(r["ss"]))
+    return out
+
+
+def _lloyd_update(books, stats) -> list:
+    """The centroid update: ``floor(Σ/n + 0.5)`` per non-empty cell.  Σ
+    and n are exact ints, so the true division is correctly rounded and
+    identical in Python/DuckDB/Spark.  An empty cell keeps its old
+    centroid: labels are POSITIONS in the codebook, so dropping one
+    would silently renumber every later label."""
+    import math
+
+    return [[[math.floor(int(x) / st[c][0] + 0.5) for x in st[c][1]]
+             if c in st else cent
+             for c, cent in enumerate(book)]
+            for book, st in zip(books, stats)]
+
+
+def lloyd_fit(qdf: DataFrame, id_col: str, *, k: int, m: int,
+               n_iter: int):
+    """The fit skeleton of the Lloyd family over a frame carrying the
+    quantized ``_q``: :func:`lloyd_probe` → ``right_size`` + persist →
+    init (the ``k`` rows with the smallest ``id_col``, split into m
+    slices) → ``n_iter − 1`` rounds of nearest cell, sufficient
+    statistics and update.
+
+    Small frames (within the probe's caps) run the rounds on the probe
+    rows on the driver — the same integers, so the same codebooks, at
+    one job instead of count + init-take + one job per round; larger
+    frames run one :func:`_cluster_suff_stats` scan per round.  Returns
+    ``(qdf, books)``: the persisted frame (the distributed fit scans it
+    ``n_iter + 1`` times with the caller's final assignment;
+    MEMORY_AND_DISK so an over-memory fit spills instead of recomputing)
+    and the m codebooks of ≤ k integer-grid centroids."""
     import numpy as np
 
-    out: dict = {}
-    for r in parts:
-        c = int(r["cl"])
-        n, s, ss = out.get(c, (0, None, 0))
-        sv = np.asarray(r["s"], dtype=np.int64)
-        out[c] = (n + int(r["n"]),
-                  sv if s is None else s + sv,
-                  ss + int(r["ss"]))
-    return out
+    prows = lloyd_probe(qdf.select(id_col, "_q"))
+    local = prows is not None
+    qdf = right_size(qdf, len(prows) if local else qdf.count()).persist(
+        StorageLevel.MEMORY_AND_DISK)
+    first = (sorted(prows, key=lambda r: r[id_col])[:k] if local
+             else qdf.select(id_col, "_q").orderBy(id_col).take(k))
+    if not first:
+        raise ValueError("Lloyd fit: empty input frame")
+    dim = len(first[0]["_q"])
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    sub = dim // m
+    books = [[[int(x) for x in r["_q"][j * sub:(j + 1) * sub]]
+              for r in first] for j in range(m)]
+    X = np.asarray([r["_q"] for r in prows], dtype=np.int64) if local \
+        else None
+    for _ in range(n_iter - 1):
+        stats = (_suff_stats(X, nearest_cells(X, books)) if local
+                 else _cluster_suff_stats(qdf, books=books))
+        books = _lloyd_update(books, stats)
+    return qdf, books
 
 
 def kmeans_lloyd_fit(df: DataFrame, id_col: str, *, array_col: str,
@@ -243,15 +333,13 @@ def kmeans_lloyd_fit(df: DataFrame, id_col: str, *, array_col: str,
     ``avg`` over doubles is partition-order-dependent in the last bits and
     a mean can land on a rounding boundary; integer sums cannot.
 
-    Scale shape: each round is one linear scan; assignment is an
-    Arrow-batched pandas_udf doing one numpy broadcast per batch (k×dim
-    centroids ride inside the UDF closure — no join, no shuffle).  A pure
-    Column expression here would be ~k×dim codegen nodes (8×64 ≈ 1k),
-    which costs 15-20 s of janino compile per stage — measured ~2×
-    slower end-to-end than the Arrow path even at sf0.001, and the
-    compile tax recurs per round.  Centroid re-aggregation stays JVM-side
-    (``sum`` per element, map-side combined).  Driver state is k×dim
-    ints per round.
+    This is the m = 1 case of the shared core (:func:`lloyd_fit`): each
+    distributed round is one Arrow-batched scan that assigns and
+    accumulates together, and the final assignment is the
+    :func:`nearest_cells_udf` pandas UDF (k×dim centroids in the closure
+    — no join, no shuffle).  A pure Column expression here would be
+    ~k×dim codegen nodes (8×64 ≈ 1k), which costs 15-20 s of janino
+    compile per stage.  Driver state is k×dim ints per round.
 
     Returns ``(assigned, centroids)``: the input plus ``_q`` (quantized
     vector) and ``cluster``, and the final integer-grid centroid list.
@@ -265,65 +353,10 @@ def kmeans_lloyd_fit(df: DataFrame, id_col: str, *, array_col: str,
     accumulate storage blocks (wrappers that fully materialize their
     small outputs release it themselves).
     """
-    import math
-
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     qdf = df.withColumn("_q", quantize_array(F.col(array_col), quantize))
-    # Bounded-probe fast path (r10): ONE limit-collect replaces the
-    # count + init-take + per-round suff-stats jobs when the fit frame
-    # is small — the iterations run through the local twin
-    # (_lloyd_local_rounds, bit-identical by the exactness contract
-    # below) and the final distributed assignment is unchanged.  Past
-    # the cap the probe rows are discarded and the job-per-round loop
-    # runs as before (a 100 TB fit frame takes that path).
-    prows = lloyd_probe(qdf.select(id_col, "_q"))
-    local = prows is not None
-    # The distributed fit scans qdf n_iter+1 times (assign per round +
-    # the final one); cache so parquet read + quantization run once,
-    # MEMORY_AND_DISK so an over-memory fit spills instead of
-    # recomputing.  On the local path the persist materializes lazily at
-    # the final assignment.
-    qdf = right_size(qdf, len(prows) if local else qdf.count()).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    if local:
-        centroids = _lloyd_local_rounds(prows, id_col, k, n_iter)
-        dim = len(centroids[0])
-    else:
-        centroids = [[int(x) for x in r["_q"]]
-                     for r in qdf.select(id_col, "_q")
-                     .orderBy(id_col).take(k)]
-        dim = len(centroids[0])
-
-    def assign(frame: DataFrame, cents) -> DataFrame:
-        C = np.asarray(cents, dtype=np.int64)
-
-        @pandas_udf("int")
-        def _nearest(s: pd.Series) -> pd.Series:
-            if not len(s):
-                return pd.Series(np.zeros(0, dtype="int32"))
-            X = np.stack([np.asarray(v, dtype=np.int64) for v in s])
-            # exact squared distances (BLAS identity, int64 fallback);
-            # np.argmin breaks ties toward the lower index, same as the
-            # oracle's ORDER BY dist, cl
-            d = exact_sq_dists(X, C)
-            return pd.Series(np.argmin(d, axis=1).astype("int32"))
-
-        return frame.withColumn("cluster", _nearest(F.col("_q")))
-
-    for _ in range(0 if local else n_iter - 1):
-        assigned = assign(qdf, centroids)
-        stats = _cluster_suff_stats(assigned)
-        # floor(Σ/n + 0.5): Σ and n are exact ints, so the true division is
-        # correctly rounded and identical in Python/DuckDB/Spark.  Keep the
-        # previous centroid for a cluster that lost every member: labels
-        # are POSITIONS in the centroid array, so dropping an empty cluster
-        # would silently renumber all later labels.
-        got = {c: [math.floor(int(s[j]) / n + 0.5) for j in range(dim)]
-               for c, (n, s, _ss) in stats.items()}
-        centroids = [got.get(i, c) for i, c in enumerate(centroids)]
-    assigned = assign(qdf, centroids)
+    qdf, (centroids,) = lloyd_fit(qdf, id_col, k=k, m=1, n_iter=n_iter)
+    assigned = qdf.withColumn(
+        "cluster", nearest_cells_udf([centroids])(F.col("_q"))[0])
     assigned.lloyd_cache = qdf     # release handle for long-lived sessions
     return assigned, centroids
 
@@ -419,17 +452,6 @@ def pca_cov_eigen(df: DataFrame, cols: Sequence[str], *,
     return comps.tolist(), eig, [e / total for e in eig]
 
 
-def bisecting_kmeans(df: DataFrame, features: Sequence[str] = (), *,
-                     k: int = 8, array_col: Optional[str] = None,
-                     seed: int = 42) -> DataFrame:
-    from pyspark.ml.clustering import BisectingKMeans as BKM
-
-    assembled = assemble_features(df, features, array_col=array_col)
-    model = BKM(k=k, seed=seed, featuresCol="features",
-                predictionCol="cluster").fit(assembled)
-    return model.transform(assembled).drop("features")
-
-
 def silhouette(clustered: DataFrame, features: Sequence[str] = (), *,
                array_col: Optional[str] = None,
                cluster_col: str = "cluster") -> float:
@@ -443,62 +465,39 @@ def silhouette(clustered: DataFrame, features: Sequence[str] = (), *,
         metricName="silhouette").evaluate(assembled))
 
 
-def _silhouette_local(prows, q_col: str, cluster_col: str) -> float:
-    """silhouette_exact's bounded-frame local twin: the identical
-    exact-integer algebra (n_C·|x|² − 2·x·S_C + SS_C numerators, same
-    int64-vs-object-int guard, same per-point 1e-9 quantization and
-    integer mean) on a probe-fetched row list — one batch instead of a
-    suff-stats scan plus a scoring scan, bit-identical because no float
-    ever depends on batch or partition boundaries."""
+def _silhouette_sum(X, own, N, S, SS) -> int:
+    """Σ over the rows of ``X`` (own-cluster positions ``own``) of the
+    per-point silhouettes quantized to 1e-9 — an exact integer, so
+    batch sums add up to the same total under any split.
+
+    Numerators n_C·|x|² − 2·x·S_C + SS_C are exact int64 while the
+    worst-case intermediate stays under 2⁶²; past that they switch to
+    exact Python-int (object-dtype) arithmetic — slower, never wrong."""
     import numpy as np
 
-    X = np.asarray([r[q_col] for r in prows], dtype=np.int64)
-    cl_raw = [int(r[cluster_col]) for r in prows]
-    cls = sorted(set(cl_raw))
-    if len(cls) < 2:
-        return 0.0
-    idx = {c: i for i, c in enumerate(cls)}
-    own = np.asarray([idx[c] for c in cl_raw])
     dim = X.shape[1]
-    k = len(cls)
-    N = np.zeros(k, dtype=np.int64)
-    S = np.zeros((k, dim), dtype=np.int64)
-    SS_py = [0] * k
-    for i in range(k):
-        m = own == i
-        N[i] = int(m.sum())
-        S[i] = X[m].sum(axis=0)
-        rs = (X[m] * X[m]).sum(axis=1)
-        SS_py[i] = int(rs.astype(object).sum())
-    s_max = int(np.abs(S).max()) if S.size else 0
-    n_max = int(N.max()) if N.size else 0
-    ss_max = max(SS_py) if SS_py else 0
     x_abs_max = int(np.abs(X).max()) if X.size else 0
-    worst = (n_max * dim * x_abs_max * x_abs_max
-             + 2 * dim * x_abs_max * s_max + ss_max)
+    worst = (int(N.max()) * dim * x_abs_max * x_abs_max
+             + 2 * dim * x_abs_max * int(np.abs(S).max()) + max(SS))
     if worst < (1 << 62):
-        SS = np.asarray(SS_py, dtype=np.int64)
-        x2 = (X * X).sum(axis=1)
-        num = N[None, :] * x2[:, None] - 2 * (X @ S.T) + SS[None, :]
+        num = (N[None, :] * (X * X).sum(axis=1)[:, None]
+               - 2 * (X @ S.T) + np.asarray(SS, dtype=np.int64)[None, :])
     else:
         Xo = X.astype(object)
-        num = (np.asarray(N, dtype=object)[None, :]
-               * (Xo * Xo).sum(axis=1)[:, None]
+        num = (N.astype(object)[None, :] * (Xo * Xo).sum(axis=1)[:, None]
                - 2 * (Xo @ S.astype(object).T)
-               + np.asarray(SS_py, dtype=object)[None, :])
-    npt = len(X)
-    si = np.zeros(npt)
-    for p in range(npt):
+               + np.asarray(SS, dtype=object)[None, :])
+    si = np.zeros(len(X))
+    for p in range(len(X)):
         o = own[p]
         if N[o] <= 1:
-            continue
+            continue                                       # singleton: s=0
         a = float(int(num[p, o])) / float(int(N[o] - 1))
         b = min(float(int(num[p, c])) / float(int(N[c]))
-                for c in range(k) if c != o)
+                for c in range(len(N)) if c != o)
         m = a if a >= b else b
         si[p] = (b - a) / m if m > 0 else 0.0
-    sq = np.floor(si * 1e9 + 0.5).astype(np.int64)
-    return float(int(sq.sum())) / npt / 1e9
+    return int(np.floor(si * 1e9 + 0.5).astype(np.int64).sum())
 
 
 def silhouette_exact(assigned: DataFrame, *, q_col: str = "_q",
@@ -509,7 +508,7 @@ def silhouette_exact(assigned: DataFrame, *, q_col: str = "_q",
 
     For point x and cluster C: mean_{y∈C} |x−y|² =
     (n_C·|x|² − 2·x·S_C + SS_C) / n_C with S_C = Σy, SS_C = Σ|y|² — so a
-    single groupBy collects (n, S, SS) per cluster (k×dim ints on the
+    single scan collects (n, S, SS) per cluster (k×dim ints on the
     driver) and a second scan scores every point against every cluster
     without any pairwise join (the same algebra MLlib's
     ClusteringEvaluator uses, here on the exact integer grid of
@@ -521,84 +520,47 @@ def silhouette_exact(assigned: DataFrame, *, q_col: str = "_q",
     Overflow posture: per-row |q|² reaches ~dim·(q_max)² (≈2.6e14 at
     LLOYD_SCALE with unit-scale dim-64 embeddings), so the CLUSTER sums
     SS=Σ|q|² and the per-point numerators n_C·|x|² and x·S_C leave int64
-    around 10⁴–10⁷ rows per cluster.  The Spark-side SS accumulates in
-    decimal(38,0) (exact far past any row count), and the scoring batch
-    switches to exact Python-int (object-dtype) arithmetic when the
-    worst-case intermediate approaches 2⁶³ — slower, never wrong.
+    around 10⁴–10⁷ rows per cluster.  SS accumulates in Python ints, and
+    :func:`_silhouette_sum` switches to exact Python-int arithmetic when
+    the worst-case intermediate approaches 2⁶³.
     """
     import numpy as np
 
     # Bounded local twin (r10, same caps as the Lloyd probe): ONE
-    # limit-collect replaces the dim-first + suff-stats + scoring jobs.
-    # Every quantity here is an exact integer (cluster sums, per-point
+    # limit-collect replaces the suff-stats + scoring jobs.  Every
+    # quantity here is an exact integer (cluster sums, per-point
     # numerators, the 1e-9-quantized silhouettes), so the local
     # computation is bit-identical to the batched mapInPandas path
-    # under any partitioning; past the cap the distributed path runs
-    # unchanged.
+    # under any partitioning; past the cap the distributed path runs.
     prows = lloyd_probe(assigned.select(q_col, cluster_col), q_col)
     if prows is not None:
-        return _silhouette_local(prows, q_col, cluster_col)
-
-    dim = len(assigned.select(q_col).first()[0])
-    stats = _cluster_suff_stats(assigned, q_col=q_col,
-                                cluster_col=cluster_col, with_ss=True)
-    cls = sorted(stats)
-    if len(cls) < 2:
+        X = np.asarray([r[q_col] for r in prows], dtype=np.int64)
+        cl = np.asarray([int(r[cluster_col]) for r in prows])
+        stats = _suff_stats(X, cl[:, None], with_ss=True)[0]
+    else:
+        stats = _cluster_suff_stats(assigned, q_col=q_col,
+                                    cluster_col=cluster_col,
+                                    with_ss=True)[0]
+    if len(stats) < 2:
         return 0.0      # silhouette undefined with one cluster (sklearn: s=0)
+    cls = sorted(stats)
     idx = {c: i for i, c in enumerate(cls)}
-    S = np.zeros((len(cls), dim), dtype=np.int64)
-    SS_py = [0] * len(cls)          # Python ints: partition sums pass 2⁶³
-    N = np.zeros(len(cls), dtype=np.int64)
-    for c, (n, s, ss) in stats.items():
-        i = idx[c]
-        S[i] = s
-        SS_py[i] = ss
-        N[i] = n
-    # worst-case per-point intermediate: n_C·|x|² + 2·|x·S_C| + SS_C.
-    # |x|² ≤ dim·x_max² and |x·S_C| ≤ dim·x_max·max|S| — if that bound
-    # nears 2⁶³, int64 would wrap silently; use exact object-int math.
-    s_max = int(np.abs(S).max()) if S.size else 0
-    n_max = int(N.max()) if N.size else 0
-    ss_max = max(SS_py) if SS_py else 0
-    exact_obj = [False]              # decided per batch, sticky once tripped
-
-    def _int64_safe(x_abs_max: int) -> bool:
-        worst = (n_max * dim * x_abs_max * x_abs_max
-                 + 2 * dim * x_abs_max * s_max + ss_max)
-        return worst < (1 << 62)
+    N = np.asarray([stats[c][0] for c in cls], dtype=np.int64)
+    S = np.stack([stats[c][1] for c in cls])
+    SS = [stats[c][2] for c in cls]          # Python ints: sums pass 2⁶³
+    if prows is not None:
+        own = np.asarray([idx[c] for c in cl.tolist()])
+        return float(_silhouette_sum(X, own, N, S, SS)) / len(X) / 1e9
 
     def _stats(it):
         for pdf in it:
+            if not len(pdf):
+                continue
             X = np.stack([np.asarray(v, dtype=np.int64)
                           for v in pdf[q_col]])
             own = np.asarray([idx[int(c)] for c in pdf[cluster_col]])
-            x_abs_max = int(np.abs(X).max()) if X.size else 0
-            if exact_obj[0] or not _int64_safe(x_abs_max):
-                exact_obj[0] = True
-                Xo = X.astype(object)
-                num = (np.asarray(N, dtype=object)[None, :]
-                       * (Xo * Xo).sum(axis=1)[:, None]
-                       - 2 * (Xo @ S.astype(object).T)
-                       + np.asarray(SS_py, dtype=object)[None, :])
-            else:
-                SS = np.asarray(SS_py, dtype=np.int64)
-                x2 = (X * X).sum(axis=1)                  # exact int64
-                # numerators: n_C·|x|² − 2·x·S_C + SS_C, exact int64
-                num = (N[None, :] * x2[:, None]
-                       - 2 * (X @ S.T) + SS[None, :])
-            npt = len(X)
-            si = np.zeros(npt)
-            for p in range(npt):
-                o = own[p]
-                if N[o] <= 1:
-                    continue                               # singleton: s=0
-                a = float(int(num[p, o])) / float(int(N[o] - 1))
-                b = min(float(int(num[p, c])) / float(int(N[c]))
-                        for c in range(len(cls)) if c != o)
-                m = a if a >= b else b
-                si[p] = (b - a) / m if m > 0 else 0.0
-            sq = np.floor(si * 1e9 + 0.5).astype(np.int64)
-            yield pd.DataFrame({"ssum": [int(sq.sum())], "cnt": [npt]})
+            yield pd.DataFrame({"ssum": [_silhouette_sum(X, own, N, S, SS)],
+                                "cnt": [len(X)]})
 
     parts = (assigned.select(q_col, cluster_col)
              .mapInPandas(_stats, "ssum long, cnt long").collect())

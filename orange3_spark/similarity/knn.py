@@ -6,10 +6,14 @@ distance-matrix surface mapping Orange's ``Distance`` classes
 (``Orange/distance/distance.py``: Euclidean ``:198``, Manhattan ``:342``,
 Cosine ``:394``, Jaccard ``:559``) onto array-column expressions.
 
-Dot products use ``F.aggregate``/``F.zip_with`` — JVM-side higher-order
-functions, no Python in the loop.  Brute-force is one broadcast of the query
-vector + a single scan; the Neighbors widget (``owneighbors.py``) is exactly
-``top-k by distance`` over that scan.
+The Column-level ``dot``/``norm``/``euclidean`` are
+``F.aggregate``/``F.zip_with`` folds, which Spark runs interpreted; the
+hot paths use Arrow-batched pandas UDFs instead — the ``_seq_*`` twins
+that replay the folds' op order bit for bit (LSH near-dups) and the
+exact-BLAS nearest-cell kernel of ``ml/cluster`` (IVF probes).
+Brute-force is one broadcast of the query vector + a single scan; the
+Neighbors widget (``owneighbors.py``) is exactly ``top-k by distance``
+over that scan.
 """
 
 from __future__ import annotations
@@ -48,11 +52,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
 def euclidean(a: Column, b: Column) -> Column:
     return F.sqrt(F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
                               F.lit(0.0), lambda acc, v: acc + v))
-
-
-def manhattan(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: F.abs(x - y)),
-                       F.lit(0.0), lambda acc, v: acc + v)
 
 
 def _as_double(c: Column) -> Column:
@@ -246,62 +245,73 @@ def auto_n_planes(n_rows: int, *, target_bucket_rows: int = 64,
                                                / target_bucket_rows))))
 
 
+def _has_null(col: Column) -> Column:
+    """Whether some ELEMENT of an array column is NULL (NULL for a NULL
+    array).  Arrow hands a NULL element to numpy as NaN, so the pandas
+    UDF twins below cannot tell it from a NaN element: the JVM computes
+    this flag and passes it in."""
+    return F.exists(col, lambda x: x.isNull())
+
+
 def _seq_norm_udf():
-    """Vectorized pandas UDF twin of :func:`norm` — BIT-IDENTICAL per
-    row: the accumulation loops over dimensions in order (acc = acc +
-    x·x, one rounding per op, exactly the fold's op sequence) and is
-    vectorized ACROSS rows, where IEEE rounding is per-lane.  NULL
-    arrays → NULL, any length folds over its own length, sqrt is
-    correctly rounded in both runtimes.  Replaces the interpreted
-    higher-order ``F.aggregate`` evaluator (CodegenFallback) on the
-    LSH hot path — guide §4.2; an unrolled JVM expression chain was
-    measured first and REJECTED: at signature widths it overflows
-    janino's 64 KB method limit and the whole stage falls back to the
-    interpreter."""
+    """Vectorized pandas UDF twin of :func:`norm`, called as
+    ``udf(v, _has_null(v))`` — BIT-IDENTICAL per row: the accumulation
+    loops over dimensions in order (acc = acc + x·x, one rounding per
+    op, exactly the fold's op sequence) and is vectorized ACROSS rows,
+    where IEEE rounding is per-lane.  NULL arrays and arrays with a
+    NULL element → NULL (the fold's acc turns NULL); a NaN element →
+    NaN; any length folds over its own length, sqrt is correctly
+    rounded in both runtimes.  The result is a masked ``FloatingArray``:
+    a NaN in a plain float Series would reach Spark as NULL.  Replaces
+    the interpreted higher-order ``F.aggregate`` evaluator
+    (CodegenFallback) on the LSH hot path — guide §4.2; an unrolled JVM
+    expression chain was measured first and REJECTED: at signature
+    widths it overflows janino's 64 KB method limit and the whole stage
+    falls back to the interpreter."""
     import numpy as np
 
     @F.pandas_udf("double")
-    def _n(v: pd.Series) -> pd.Series:
+    def _n(v: pd.Series, nul: pd.Series) -> pd.Series:
         vals = v.to_numpy()
-        lens = np.fromiter((-1 if x is None else len(x) for x in vals),
+        lens = np.fromiter((-1 if x is None or z else len(x)
+                            for x, z in zip(vals, nul)),
                            dtype=np.int64, count=len(vals))
-        out = np.full(len(vals), None, dtype=object)
-        for ln in np.unique(lens[lens >= 0]):
+        out = np.zeros(len(vals), dtype=np.float64)
+        for ln in np.unique(lens[lens > 0]):
             idx = np.nonzero(lens == ln)[0]
-            if ln == 0:
-                out[idx] = 0.0
-                continue
             X = np.stack(vals[idx]).astype(np.float64)
             acc = np.zeros(len(idx), dtype=np.float64)
             for d in range(int(ln)):
                 acc = acc + X[:, d] * X[:, d]
             out[idx] = np.sqrt(acc)
-        return pd.Series(out, dtype=object)
+        return pd.Series(pd.arrays.FloatingArray(out, lens < 0))
 
     return _n
 
 
 def _lsh_buckets_udf(planes_tables, dim: int):
     """Vectorized pandas UDF twin of the per-table
-    ``concat_ws(':', t, lsh_signature(v, planes))`` projection —
-    BIT-IDENTICAL strings: each plane projection is the ordered
-    acc = acc + v[d]·plane[d] fold (float32→double casts are exact),
-    ``proj >= 0`` sets the plane's bit, and so does a NaN projection:
-    Spark orders NaN above every double, so ``NaN >= 0`` is true there
-    while numpy's is false, hence the ``~(acc < 0)`` form.  Rows whose
-    length ≠ dim (or NULL rows) get signature 0 in every table — the
-    value the JVM form produces when ``zip_with`` pads the short side
-    with NULLs and ``when(NULL >= 0)`` falls through to 0 for every
-    bit."""
+    ``concat_ws(':', t, lsh_signature(v, planes))`` projection, called
+    as ``udf(v, _has_null(v))`` — BIT-IDENTICAL strings: each plane
+    projection is the ordered acc = acc + v[d]·plane[d] fold
+    (float32→double casts are exact), ``proj >= 0`` sets the plane's
+    bit, and so does a NaN projection: Spark orders NaN above every
+    double, so ``NaN >= 0`` is true there while numpy's is false, hence
+    the ``~(acc < 0)`` form.  Rows whose length ≠ dim, NULL rows and
+    rows with a NULL element get signature 0 in every table — the value
+    the JVM form produces when a NULL (a NULL element, or the NULLs
+    ``zip_with`` pads a short side with) poisons the fold and
+    ``when(NULL >= 0)`` falls through to 0 for every bit."""
     import numpy as np
 
     pmats = [np.asarray(p, dtype=np.float64) for p in planes_tables]
 
     @F.pandas_udf("array<string>")
-    def _b(v: pd.Series) -> pd.Series:
+    def _b(v: pd.Series, nul: pd.Series) -> pd.Series:
         vals = v.to_numpy()
         n = len(vals)
-        ok = np.fromiter((x is not None and len(x) == dim for x in vals),
+        ok = np.fromiter((x is not None and not z and len(x) == dim
+                          for x, z in zip(vals, nul)),
                          dtype=bool, count=n)
         sigs = np.zeros((len(pmats), n), dtype=np.int64)
         if ok.any():
@@ -323,34 +333,33 @@ def _lsh_buckets_udf(planes_tables, dim: int):
 
 
 def _seq_dot_udf():
-    """Vectorized pandas UDF twin of :func:`dot` — BIT-IDENTICAL: the
+    """Vectorized pandas UDF twin of :func:`dot`, called as
+    ``udf(a, b, _has_null(a) | _has_null(b))`` — BIT-IDENTICAL: the
     ordered acc = acc + a[d]·b[d] fold, vectorized across rows.  NULL
-    on either side → NULL; unequal lengths → NULL (``zip_with`` pads
-    the short side with NULLs, poisoning the fold); equal lengths fold
-    over that shared length."""
+    on either side, or a NULL element → NULL; unequal lengths → NULL
+    (``zip_with`` pads the short side with NULLs, poisoning the fold);
+    a NaN element → NaN; equal lengths fold over that shared length.
+    Masked ``FloatingArray`` output, as in :func:`_seq_norm_udf`."""
     import numpy as np
 
     @F.pandas_udf("double")
-    def _d(a: pd.Series, b: pd.Series) -> pd.Series:
+    def _d(a: pd.Series, b: pd.Series, nul: pd.Series) -> pd.Series:
         av, bv = a.to_numpy(), b.to_numpy()
         n = len(av)
         lens = np.fromiter(
-            (-1 if (x is None or y is None or len(x) != len(y))
-             else len(x) for x, y in zip(av, bv)),
+            (-1 if (x is None or y is None or z or len(x) != len(y))
+             else len(x) for x, y, z in zip(av, bv, nul)),
             dtype=np.int64, count=n)
-        out = np.full(n, None, dtype=object)
-        for ln in np.unique(lens[lens >= 0]):
+        out = np.zeros(n, dtype=np.float64)
+        for ln in np.unique(lens[lens > 0]):
             idx = np.nonzero(lens == ln)[0]
-            if ln == 0:
-                out[idx] = 0.0
-                continue
             X = np.stack(av[idx]).astype(np.float64)
             Y = np.stack(bv[idx]).astype(np.float64)
             acc = np.zeros(len(idx), dtype=np.float64)
             for d in range(int(ln)):
                 acc = acc + X[:, d] * Y[:, d]
             out[idx] = acc
-        return pd.Series(out, dtype=object)
+        return pd.Series(pd.arrays.FloatingArray(out, lens < 0))
 
     return _d
 
@@ -411,14 +420,15 @@ def neardup_cosine(df: DataFrame, threshold: float = 0.95, *,
     # frames result as r10's _nation_features experiment)
     base = (spread(df.select(F.col(id_col).alias("_id"),
                              F.col(vec_col).alias("_v")))
-            .withColumn("_n", _seq_norm_udf()(F.col("_v"))))
+            .withColumn("_z", _has_null(F.col("_v")))
+            .withColumn("_n", _seq_norm_udf()(F.col("_v"), F.col("_z"))))
     if n_planes == "auto":
         n_planes = auto_n_planes(base.count())
     buckets = _lsh_buckets_udf(
         [hyperplanes(dim, n_planes, seed + 7919 * t)
          for t in range(n_tables)], dim)
-    tagged = base.select(
-        "_id", F.explode(buckets(F.col("_v"))).alias("bucket"))
+    tagged = base.select("_id", F.explode(buckets(F.col("_v"), F.col("_z")))
+                         .alias("bucket"))
     # The bucket self-join and the multi-table dedup move ONLY ids:
     # shuffling the candidate pairs WITH their vectors through the
     # distinct moved two dim-length arrays per pair (measured the
@@ -434,13 +444,15 @@ def neardup_cosine(df: DataFrame, threshold: float = 0.95, *,
     pairs = (cand
              .join(base.select(F.col("_id").alias("id_a"),
                                F.col("_v").alias("va"),
+                               F.col("_z").alias("za"),
                                F.col("_n").alias("na")), "id_a")
              .join(base.select(F.col("_id").alias("id_b"),
                                F.col("_v").alias("vb"),
+                               F.col("_z").alias("zb"),
                                F.col("_n").alias("nb")), "id_b"))
-    return (pairs.withColumn("score",
-                             _seq_dot_udf()(F.col("va"), F.col("vb"))
-                             / (F.col("na") * F.col("nb")))
+    dot_ab = _seq_dot_udf()(F.col("va"), F.col("vb"),
+                            F.col("za") | F.col("zb"))
+    return (pairs.withColumn("score", dot_ab / (F.col("na") * F.col("nb")))
                  .filter(F.col("score") >= threshold)
                  .select("id_a", "id_b", "score"))
 
@@ -487,57 +499,30 @@ def ivf_fit(data: DataFrame, *, vec_col: str = "embedding",
     postings list (id, quantized vector, cell) and the refreshed
     centroid table.  Callers searching the same index at several
     ``nprobe`` settings (e.g. the recall@k eval) share one build;
-    caller unpersists ``assigned``."""
-    import math
+    caller unpersists ``assigned``.
 
-    from orange3_spark.ml.cluster import kmeans_lloyd_fit
+    The refresh is one more Lloyd update from the FINAL assignment
+    (``ml/cluster``'s shared statistics scan and ``floor(Σ/n + 0.5)``
+    update; an empty cell keeps its centroid)."""
+    from orange3_spark.ml.cluster import (_cluster_suff_stats,
+                                          _lloyd_update, kmeans_lloyd_fit)
 
     fitted, cents0 = kmeans_lloyd_fit(data, id_col, array_col=vec_col,
                                       k=n_cells, n_iter=n_iter)
     assigned = fitted.cache()
-    dim = len(cents0[0])
-    # refresh centroids from the FINAL assignment — exact integer sums,
-    # floor(Σ/n + 0.5) back onto the grid (empty cells keep the old one)
-    rows = (assigned.groupBy("cluster")
-            .agg(*[F.sum(F.col("_q").getItem(j)).alias(f"s{j}")
-                   for j in range(dim)],
-                 F.count(F.lit(1)).alias("n"))
-            .collect())
-    # the collect above materialized `assigned`'s own cache — the Lloyd
+    (cents1,) = _lloyd_update([cents0], _cluster_suff_stats(assigned))
+    # the scan above materialized `assigned`'s own cache — the Lloyd
     # quantized frame underneath is now redundant; release it so repeated
     # index builds don't stack storage blocks
     fitted.lloyd_cache.unpersist()
-    got = {int(r["cluster"]):
-           [math.floor(int(r[f"s{j}"]) / int(r["n"]) + 0.5)
-            for j in range(dim)]
-           for r in rows}
-    spark = data.sparkSession
-    local = [(i, got.get(i, c)) for i, c in enumerate(cents0)]
-    cents = spark.createDataFrame(local, "cluster int, cvec array<bigint>")
+    local = list(enumerate(cents1))
+    cents = data.sparkSession.createDataFrame(
+        local, "cluster int, cvec array<bigint>")
     # the table was built from driver-local data — register it so
     # probe_cells never pays a collect job to read back what the
     # driver already holds (k×dim ints, the same bound broadcast has)
     _CENT_ROWS_CACHE[cents] = local
     return assigned, cents
-
-
-def probe_cells_udf(cents: DataFrame, nprobe: int):
-    """Arrow-batched probe selection: for each quantized vector, the
-    ``nprobe`` nearest cell ids by exact squared distance, ties toward
-    the lower cell id — semantics identical to the former
-    ``crossJoin(broadcast(cents)) + row_number OVER (ORDER BY cdist,
-    cluster)`` JVM path (and to the SQL oracles' ``ORDER BY
-    list_distance, cl``: distances are exact ints, sqrt is monotone and
-    cannot collapse two distinct int64 d² at these magnitudes).
-
-    Why not the JVM path: its per-row ``zip_with``/``aggregate`` folds
-    run interpreted — n·k·dim element ops, ~5.7G at sf10 with the √n
-    cell count real IVF uses (n=200k → k=447) — while one
-    :func:`~orange3_spark.ml.cluster.exact_sq_dists` BLAS matmul per
-    Arrow batch does the same exact arithmetic at memory-bandwidth
-    speed.  The centroid table (k×dim ints) rides in the UDF closure,
-    the same driver-size bound the broadcast had."""
-    return _probe_udf_from_rows(_cent_rows(cents), nprobe)
 
 
 def _cent_rows(cents: DataFrame):
@@ -551,70 +536,31 @@ def _cent_rows(cents: DataFrame):
                   for r in cents.collect())
 
 
-def _probe_udf_from_rows(rows, nprobe: int):
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    from orange3_spark.ml.cluster import exact_sq_dists
-
-    cl_ids = np.asarray([c for c, _ in rows], dtype="int32")
-    C = np.asarray([v for _, v in rows], dtype=np.int64)
-    take = min(nprobe, len(rows))
-
-    @pandas_udf("array<int>")
-    def _probe(s: pd.Series) -> pd.Series:
-        if not len(s):
-            return pd.Series([], dtype=object)
-        X = np.stack([np.asarray(v, dtype=np.int64) for v in s])
-        d = exact_sq_dists(X, C)
-        idx = np.argsort(d, axis=1, kind="stable")[:, :take]
-        return pd.Series(list(cl_ids[idx]))
-
-    return _probe
-
-
 def probe_cells(df: DataFrame, cents: DataFrame, nprobe: int, *,
-                vec_col: str = "qv", id_col: str = "qid",
-                jvm_max_cells_dim: int = 4096) -> DataFrame:
+                vec_col: str = "qv") -> DataFrame:
     """``df`` + exploded ``cluster`` column: each row's ``nprobe``
-    nearest cells, ties toward the lower cell id — ONE rule, two
-    physical paths chosen by centroid-table size:
+    nearest cells, ties toward the lower cell id — the Lloyd family's
+    nearest-cell rule (``ml/cluster.nearest_cells``), the same one the
+    fit assigns with, and the SQL oracles' ``ORDER BY list_distance,
+    cl`` (distances are exact ints; sqrt is monotone and cannot
+    collapse two distinct int64 d² at these magnitudes).
 
-    * small (k·dim ≤ ``jvm_max_cells_dim``, e.g. the 8-cell graded
-      queries): broadcast crossJoin + codegen'd window — an Arrow
-      python round-trip costs ~0.3 s of fixed latency per stage, which
-      dominates when the fold is only n·k·dim ≈ 1M element ops;
-    * large (the √n cell counts real IVF uses): the Arrow-batched exact
-      BLAS matmul (:func:`probe_cells_udf`) — the interpreted fold
-      would be n·k·dim ≈ 5.7G ops at sf10.
+    One Arrow-batched pandas UDF: one exact BLAS matmul per batch, the
+    centroid table (k×dim ints) riding in the closure — the same
+    driver-size bound a broadcast has, and no per-element interpreted
+    fold (n·k·dim ≈ 5.7G steps at sf10 with the √n cell counts real IVF
+    uses)."""
+    from orange3_spark.ml.cluster import nearest_cells_udf
 
-    Both paths compute exact integer distances and identical
-    tie-breaks, so the choice never changes a result (pytest pins the
-    equality)."""
     rows = _cent_rows(cents)
-    k = len(rows)
-    dim = len(rows[0][1]) if k else 0
-    if k * dim <= jvm_max_cells_dim:
-        from pyspark.sql.window import Window
-
-        d2 = F.aggregate(
-            F.zip_with(F.col(vec_col), F.col("cvec"),
-                       lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"), lambda acc, v: acc + v)
-        wp = Window.partitionBy(id_col).orderBy(F.col("_cdist"),
-                                                F.col("cluster"))
-        return (df.crossJoin(F.broadcast(cents))
-                .withColumn("_cdist", d2)
-                .withColumn("_crn", F.row_number().over(wp))
-                .filter(F.col("_crn") <= nprobe)
-                .drop("_cdist", "_crn", "cvec"))
-    udf = _probe_udf_from_rows(rows, nprobe)
+    udf = nearest_cells_udf([[v for _, v in rows]], nprobe,
+                            cell_ids=[c for c, _ in rows])
     return df.withColumn("cluster", F.explode(udf(F.col(vec_col))))
 
 
 def ivf_append(assigned: DataFrame, cents: DataFrame,
-               new_data: DataFrame, *, vec_col: str = "embedding",
-               id_col: str = "vec_id") -> DataFrame:
+               new_data: DataFrame, *,
+               vec_col: str = "embedding") -> DataFrame:
     """Incremental IVF maintenance: assign NEW vectors into an EXISTING
     index without refitting the coarse quantizer — the daily-ingest
     path of a training-data pipeline (embeddings arrive in batches; a
@@ -624,20 +570,20 @@ def ivf_append(assigned: DataFrame, cents: DataFrame,
 
     Assignment uses the identical rule as fit time — nearest cell by
     exact integer distance, ties toward the lower cell id
-    (:func:`probe_cells` with nprobe=1) — so an appended vector
-    lands exactly where the final fit-time assignment pass would have
-    put it, and the combined postings list remains searchable by
-    :func:`ivf_search` with unchanged semantics.  Centroids are NOT
-    refreshed (the standard IVF trade: drift accumulates until the next
-    scheduled rebuild; recall on appended data degrades gracefully, the
-    index never blocks ingest).
+    (:func:`probe_cells` with nprobe=1, the fit's own kernel) — so an
+    appended vector lands exactly where the final fit-time assignment
+    pass would have put it, and the combined postings list remains
+    searchable by :func:`ivf_search` with unchanged semantics.
+    Centroids are NOT refreshed (the standard IVF trade: drift
+    accumulates until the next scheduled rebuild; recall on appended
+    data degrades gracefully, the index never blocks ingest).
 
     ``new_data`` must carry the columns ``assigned`` was fit from;
     returns ``assigned ∪ newly-assigned`` with identical schema."""
     from orange3_spark.ml.cluster import quantize_array
 
     q = new_data.withColumn("_q", quantize_array(F.col(vec_col)))
-    q = probe_cells(q, cents, 1, vec_col="_q", id_col=id_col)
+    q = probe_cells(q, cents, 1, vec_col="_q")
     return assigned.unionByName(q.select(*assigned.columns))
 
 
@@ -842,10 +788,9 @@ def hard_negatives_blocked(df: DataFrame, *, id_col: str = "vec_id",
     q = base.select(F.col(id_col).alias("qid"),
                     F.col(label_col).alias("_lab_q"),
                     quantize_array(F.col(array_col)).alias("qv"))
-    # probe selection via probe_cells: JVM crossJoin at the graded
-    # 8-cell sizes, Arrow-batched exact BLAS at the √n cell counts
-    # where the interpreted fold would be n·k·dim ops (mining runs ALL
-    # n vectors as queries)
+    # probe selection via probe_cells: Arrow-batched exact BLAS, so
+    # the √n cell counts of a real index cost one matmul per batch
+    # (mining runs ALL n vectors as queries)
     probes = (probe_cells(q, cents, nprobe)
               .select("cluster", F.lit(1).alias("_isq"),
                       F.col("qid").alias("_id"),

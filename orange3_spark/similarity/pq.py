@@ -28,38 +28,11 @@ from __future__ import annotations
 import math
 from typing import Sequence
 
-import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from orange3_spark.ml.cluster import LLOYD_SCALE, lloyd_probe, quantize_array
-from orange3_spark.session import right_size
-
-
-def _assign_codes_udf(cents):
-    """pandas_udf: quantized vector → array<int> of m subspace codes
-    (exact int64 distances, argmin ties to the lower code)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    C = [np.asarray(c, dtype=np.int64) for c in cents]   # m × k × sub
-    m = len(C)
-    sub = C[0].shape[1]
-
-    @pandas_udf("array<int>")
-    def _codes(s: pd.Series) -> pd.Series:
-        if not len(s):
-            return pd.Series(np.zeros((0, m), dtype="int32").tolist())
-        X = np.stack([np.asarray(v, dtype=np.int64) for v in s])
-        out = np.empty((len(X), m), dtype="int32")
-        for j in range(m):
-            Xj = X[:, j * sub:(j + 1) * sub]
-            d = ((Xj[:, None, :] - C[j][None, :, :]) ** 2).sum(axis=2)
-            out[:, j] = np.argmin(d, axis=1)
-        return pd.Series(list(out))
-
-    return _codes
+from orange3_spark.ml.cluster import (LLOYD_SCALE, lloyd_fit, nearest_cells,
+                                      nearest_cells_udf, quantize_array)
 
 
 def pq_fit(df: DataFrame, id_col: str, *, array_col: str,
@@ -67,107 +40,24 @@ def pq_fit(df: DataFrame, id_col: str, *, array_col: str,
            quantize: float = LLOYD_SCALE, pre_quantized: bool = False):
     """Fit m deterministic sub-quantizers and encode the input.
 
+    Quantize, then the shared Lloyd core with m codebooks
+    (``ml/cluster.lloyd_fit``: every round scores and accumulates all m
+    subspaces in one scan), then encode with the same nearest-cell UDF.
+
     Returns ``(encoded, centroids)``: the input plus ``codes``
     (``array<int>`` of length m) and the fitted integer-grid centroid
     lists ``centroids[j][c]``.  The persisted quantized frame is exposed
     as ``encoded.pq_cache`` — unpersist once consumed (same contract as
     ``kmeans_lloyd_fit``).  ``pre_quantized=True`` takes ``array_col``
-    as already-integer-grid values (e.g. IVF residuals) verbatim."""
-    import numpy as np
-
+    as already-integer-grid values (e.g. IVF residuals) verbatim.
+    Raises ``ValueError`` on an empty frame."""
     if pre_quantized:
         qdf = df.withColumn("_q", F.col(array_col).cast("array<bigint>"))
     else:
         qdf = df.withColumn("_q",
                             quantize_array(F.col(array_col), quantize))
-    # Bounded-probe fast path (r10, the Lloyd-family pattern): one
-    # limit-collect replaces the count + init-take + per-round
-    # suff-stats jobs; the local rounds mirror _assign_codes_udf's
-    # exact-int64 distances/argmin and the identical floor(Σ/n + 0.5)
-    # update, so the codebooks — and the final distributed encoding —
-    # are bit-identical.  Past the cap the job-per-round loop runs.
-    prows = lloyd_probe(qdf.select(id_col, "_q"))
-    local = prows is not None
-    # same right-size + persist as kmeans_lloyd_fit
-    qdf = right_size(qdf, len(prows) if local else qdf.count()).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    if local:
-        srt = sorted(prows, key=lambda r: r[id_col])
-        first = [[int(x) for x in r["_q"]] for r in srt[:k]]
-    else:
-        first = [[int(x) for x in r["_q"]]
-                 for r in qdf.select(id_col, "_q").orderBy(id_col).take(k)]
-    if not first:
-        raise ValueError("pq_fit: empty input frame")
-    dim = len(first[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    cents = [[row[j * sub:(j + 1) * sub] for row in first]
-             for j in range(m)]
-
-    if local and n_iter > 1:
-        X = np.asarray([r["_q"] for r in prows], dtype=np.int64)
-        for _ in range(n_iter - 1):
-            for j in range(m):
-                Cj = np.asarray(cents[j], dtype=np.int64)
-                Xj = X[:, j * sub:(j + 1) * sub]
-                d = ((Xj[:, None, :] - Cj[None, :, :]) ** 2).sum(axis=2)
-                codes_j = np.argmin(d, axis=1)
-                for c in np.unique(codes_j):
-                    msk = codes_j == c
-                    n = int(msk.sum())
-                    s = Xj[msk].sum(axis=0)
-                    cents[j][int(c)] = [math.floor(int(x) / n + 0.5)
-                                        for x in s]
-    for _ in range(0 if local else n_iter - 1):
-        coded = qdf.withColumn("codes", _assign_codes_udf(cents)(F.col("_q")))
-
-        def _suff(it, sub=sub, m=m):
-            acc: dict = {}
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                X = np.stack([np.asarray(v, dtype=np.int64)
-                              for v in pdf["_q"]])
-                K_ = np.stack([np.asarray(v, dtype=np.int64)
-                               for v in pdf["codes"]])
-                for j in range(m):
-                    Xj = X[:, j * sub:(j + 1) * sub]
-                    for c in np.unique(K_[:, j]):
-                        msk = K_[:, j] == c
-                        a = acc.setdefault((j, int(c)),
-                                           [0, np.zeros(sub, np.int64)])
-                        a[0] += int(msk.sum())
-                        a[1] += Xj[msk].sum(axis=0)
-            rows = {"j": [], "cl": [], "n": [], "s": []}
-            for (j, c), (n, s) in acc.items():
-                rows["j"].append(j)
-                rows["cl"].append(c)
-                rows["n"].append(n)
-                rows["s"].append(s.tolist())
-            # empty partition → yield nothing: an all-empty dict frame
-            # types "s" float64 and Arrow refuses the array<long> cast
-            if rows["j"]:
-                yield pd.DataFrame(rows)
-
-        parts = (coded.select("_q", "codes")
-                 .mapInPandas(_suff, "j int, cl int, n long, s array<long>")
-                 .collect())
-        agg: dict = {}
-        for r in parts:
-            key = (int(r["j"]), int(r["cl"]))
-            n, s = agg.get(key, (0, None))
-            sv = [int(x) for x in r["s"]]
-            agg[key] = (n + int(r["n"]),
-                        sv if s is None else [a + b for a, b in zip(s, sv)])
-        for j in range(m):
-            for c in range(k):
-                if (j, c) in agg:
-                    n, s = agg[(j, c)]
-                    cents[j][c] = [math.floor(x / n + 0.5) for x in s]
-
-    encoded = qdf.withColumn("codes", _assign_codes_udf(cents)(F.col("_q")))
+    qdf, cents = lloyd_fit(qdf, id_col, k=k, m=m, n_iter=n_iter)
+    encoded = qdf.withColumn("codes", nearest_cells_udf(cents)(F.col("_q")))
     encoded.pq_cache = qdf
     return encoded, cents
 
@@ -247,9 +137,7 @@ def ivfpq_topk(df: DataFrame, query_vec: Sequence[float], *, id_col: str,
                             n_iter=n_iter, pre_quantized=True)
 
     qq = [math.floor(float(x) * quantize + 0.5) for x in query_vec]
-    order = sorted((sum((a - b) ** 2 for a, b in zip(qq, c)), i)
-                   for i, c in enumerate(cells))
-    probed = [i for _, i in order[:nprobe]]
+    probed = [int(c) for c in nearest_cells([qq], [cells], nprobe)[0]]
 
     dist = None
     for cell in probed:

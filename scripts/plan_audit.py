@@ -23,7 +23,8 @@ spec.loader.exec_module(entry)
 
 from orange3_spark.session import get_spark  # noqa: E402
 
-# query -> the plan properties a reviewer should see
+# query -> the plan properties a reviewer should see; a pattern with a
+# leading "!" is one the plan must NOT contain
 AUDITS = {
     "q1_filter_groupby": [
         ("pushed filter reaches parquet",
@@ -299,11 +300,11 @@ AUDITS.update({
          r"MapInPandas|ArrowEvalPython"),
     ],
     "q_ann_incremental": [
-        ("append assigns via broadcast centroid join at graded size "
-         "(one scan of the BATCH, never the corpus)",
-         r"BroadcastNestedLoopJoin|BroadcastHashJoin"),
-        ("per-vector nearest-cell pick is a partitioned window",
-         r"windowspecdefinition\(vec_id"),
+        ("append picks each BATCH vector's nearest cell in one "
+         "Arrow-batched exact-BLAS pass (centroids in the closure)",
+         r"ArrowEvalPython"),
+        ("no centroid cross join: no nested-loop or cartesian join",
+         r"!CartesianProduct|BroadcastNestedLoopJoin"),
     ],
     "q_select_random": [
         ("scan reads ONLY the 3 selected columns (seeded draw costs no "
@@ -384,8 +385,10 @@ JOB_BUDGETS = {
     "q_ml_kmeans": 14,
     "q_ml_shuffle_split": 9,
     "q_feature_scores": 10,
-    # pq_fit: count + take(k) + one suff-stats collect per Lloyd round +
-    # the query-vec collect + the final aggregate (measured 9 at sf0.01)
+    # pq_fit: the Lloyd probe's one bounded collect (the rounds then run
+    # on the driver; past LLOYD_LOCAL_ROWS: count + take(k) + one
+    # statistics scan per round) + the encode-and-aggregate stage-jobs
+    # (measured 6-7 at sf0.01)
     "q_pq_codes": 12,
     # bpe_fit: the CORPUS is scanned once (round 1 materializes the
     # persisted word table); each of the 8 merge rounds then runs one
@@ -410,8 +413,9 @@ JOB_BUDGETS = {
     # below the cap (past PR_LOCAL_EDGES the Pregel loop still owns the
     # job count — its historical budget was 50).
     "q_pagerank": 14,
-    # two ivf_knn builds (approx + exhaustive sides), each = Lloyd fit
-    # jobs + centroid refresh collect + the final compare aggregate
+    # ONE ivf_fit shared by both nprobe sides (the Lloyd probe + the
+    # refresh's statistics scan) + the searches' compare aggregate
+    # (measured 11 at sf0.01)
     "q_ann_recall": 30,
     # forced min-label-propagation loop: pair materialize + per-round
     # localCheckpoint + convergence agg (2 propagation rounds + 1
@@ -420,8 +424,9 @@ JOB_BUDGETS = {
     # self-join runs exactly once).  Measured 47 at sf0.01; a breach
     # means a round started re-executing the pair derivation.
     "q_dup_clusters_distributed": 55,
-    # IVF fit jobs (Lloyd rounds + refresh collect) + the blocked
-    # scoring pass (measured 14)
+    # IVF fit jobs (the Lloyd probe + the refresh's statistics scan) +
+    # the cell-size probe + the blocked scoring pass (measured 9 at
+    # sf0.01)
     "q_hard_negatives_blocked": 18,
     # driver-looped beam with one FILTERED (pushdown) scan per beam
     # member per depth — the count must stay flat as rules grow
@@ -512,11 +517,16 @@ def main() -> None:
         lines.append(f"## {name}")
         lines.append("")
         for label, pat in checks:
-            m = re.search(pat, plan)
-            mark = "✓" if m else "✗"
-            if not m:
+            absent = pat.startswith("!")
+            m = re.search(pat.lstrip("!"), plan)
+            ok = (m is None) if absent else (m is not None)
+            mark = "✓" if ok else "✗"
+            if not ok:
                 failures += 1
-            snippet = (m.group(0)[:160] if m else "NOT FOUND")
+            if absent:
+                snippet = "absent" if ok else m.group(0)[:160]
+            else:
+                snippet = m.group(0)[:160] if m else "NOT FOUND"
             lines.append(f"- {mark} {label}: `{snippet}`")
         for label, pat in BAD_PATTERNS:
             if re.search(pat, plan):

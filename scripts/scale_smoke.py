@@ -439,11 +439,10 @@ def growth_ann(dirs: list, out_path: str) -> None:
         (cap = _MINE_SKEW_FACTOR × lower-median cell size, only when
         the max cell exceeds it) to the member side."""
         from orange3_spark.similarity.knn import (_MINE_SKEW_FACTOR,
-                                                  probe_cells_udf)
+                                                  probe_cells)
 
         assigned, cents = ivf_fit(emb(d), n_cells=cells_for(n), n_iter=2)
-        probes = assigned.select(
-            F.explode(probe_cells_udf(cents, 2)("_q")).alias("cluster"))
+        probes = probe_cells(assigned.select("_q"), cents, 2, vec_col="_q")
         pc = probes.groupBy("cluster").agg(F.count(F.lit(1)).alias("p"))
         mc = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("m"))
         rows = pc.join(mc, "cluster").collect()

@@ -1059,6 +1059,59 @@ def test_cv_logreg_local_twin_matches_distributed(spark, monkeypatch):
         assert np.allclose(got, ref, atol=1e-6), (a["fold"], got, ref)
 
 
+def test_lloyd_local_twin_matches_distributed(spark, monkeypatch):
+    """Every test frame fits under LLOYD_LOCAL_ROWS, so the probe's local
+    twin runs the Lloyd rounds; a cap of 0 forces the distributed rounds
+    (one statistics scan per round).  Both must give the same integers:
+    k-means centroids and assignments, PQ codebooks and codes, IVF's
+    refreshed centroids, and the exact silhouette score."""
+    import numpy as np
+
+    from orange3_spark.similarity.knn import _cent_rows, ivf_fit
+    from orange3_spark.similarity.pq import pq_fit
+
+    rng = np.random.default_rng(5)
+    rows = [(i, [float(x) for x in rng.normal(size=8) + 2.0 * (i % 3)])
+            for i in range(90)]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>").repartition(3)
+    scans = []
+    stats = C._cluster_suff_stats
+    monkeypatch.setattr(C, "_cluster_suff_stats",
+                        lambda *a, **kw: scans.append(kw.get("books"))
+                        or stats(*a, **kw))
+
+    def fit_all():
+        a, cents = C.kmeans_lloyd_fit(df, "vec_id", array_col="embedding",
+                                      k=4, n_iter=3)
+        km = (cents, sorted((r["vec_id"], r["cluster"]) for r in a.collect()),
+              C.silhouette_exact(a))
+        a.lloyd_cache.unpersist()
+        enc, books = pq_fit(df, "vec_id", array_col="embedding",
+                            m=2, k=4, n_iter=3)
+        pq = (books,
+              sorted((r["vec_id"], list(r["codes"])) for r in enc.collect()))
+        enc.pq_cache.unpersist()
+        assigned, table = ivf_fit(df, n_cells=4, n_iter=3)
+        assigned.unpersist()
+        return km, pq, _cent_rows(table)
+
+    local = fit_all()
+    assert not any(b is not None for b in scans)   # no distributed round
+    monkeypatch.setattr(C, "LLOYD_LOCAL_ROWS", 0)
+    # keep the 3 input partitions and split each into several Arrow
+    # batches, so the scans' per-batch and per-partition sums are merged
+    monkeypatch.setattr(C, "right_size", lambda frame, n_rows: frame)
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
+    try:
+        dist = fit_all()
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    # 2 rounds each for k-means, PQ and IVF's k-means
+    assert sum(b is not None for b in scans) == 6
+    assert local == dist
+
+
 def test_permutation_importance_local_twin_matches_distributed(
         spark, monkeypatch):
     """The r10 bounded fast path (Spark-side md5 sort keys + numpy

@@ -347,6 +347,7 @@ def test_jpeg_lossless_roundtrip_property(h, w, seed, predictor, bits,
 
 
 _vec_elems = st.one_of(
+    st.none(),
     st.sampled_from([float("nan"), float("inf"), float("-inf"), 0.0, -0.0]),
     st.floats(-10, 10, allow_nan=False))
 
@@ -357,13 +358,15 @@ _vec_elems = st.one_of(
                      min_size=1, max_size=12),
        seed=st.integers(0, 1000))
 @example(vecs=[[float("nan"), 1.0, -2.0], [1.0, 2.0, 3.0]], seed=0)
+@example(vecs=[[1.0, None, 2.0]], seed=0)
 def test_lsh_buckets_udf_matches_jvm_signature(spark, vecs, seed):
     """The vectorized LSH bucket UDF sets exactly the bits of the JVM
     ``lsh_signature`` fold for any vector: a NaN projection sets its bit
     (Spark orders NaN above every double), ±inf and ±0 follow IEEE, and
-    NULL or wrong-length rows get signature 0 in every table."""
-    from orange3_spark.similarity.knn import (_lsh_buckets_udf, hyperplanes,
-                                              lsh_signature)
+    NULL rows, rows with a NULL element and wrong-length rows get
+    signature 0 in every table."""
+    from orange3_spark.similarity.knn import (_has_null, _lsh_buckets_udf,
+                                              hyperplanes, lsh_signature)
 
     dim = 3
     tables = [hyperplanes(dim, 5, seed + 7919 * t) for t in range(2)]
@@ -372,7 +375,39 @@ def test_lsh_buckets_udf_matches_jvm_signature(spark, vecs, seed):
     jvm = F.array(*[F.concat_ws(":", F.lit(str(t)),
                                 lsh_signature("v", P).cast("string"))
                     for t, P in enumerate(tables)])
-    rows = df.select("id", _lsh_buckets_udf(tables, dim)(F.col("v"))
-                     .alias("udf"), jvm.alias("jvm")).collect()
+    udf = _lsh_buckets_udf(tables, dim)(F.col("v"), _has_null(F.col("v")))
+    rows = df.select("id", udf.alias("udf"), jvm.alias("jvm")).collect()
     for r in rows:
         assert r.udf == r.jvm, (vecs[r.id], r.udf, r.jvm)
+
+
+_vecs = st.one_of(st.none(), st.lists(_vec_elems, max_size=4))
+
+
+@settings(max_examples=10, deadline=None)
+@given(pairs=st.lists(st.tuples(_vecs, _vecs), min_size=1, max_size=12))
+@example(pairs=[([1.0, float("nan"), 2.0], [1.0, 1.0, 1.0]),
+                ([1.0, None, 2.0], [1.0, 2.0, 3.0]),
+                ([-0.0], [1.0]), ([], [])])
+def test_seq_norm_dot_udfs_match_jvm_folds(spark, pairs):
+    """The vectorized norm and dot UDFs return exactly what the JVM
+    ``norm``/``dot`` folds return, bit for bit: NaN where a NaN element
+    makes the fold NaN, NULL for NULL rows, rows with a NULL element and
+    (dot) unequal lengths, IEEE results for ±inf and ±0 — so the LSH
+    near-dup path's ``score >= threshold`` keeps and drops the pairs
+    the fold would."""
+    from orange3_spark.similarity.knn import (_has_null, _seq_dot_udf,
+                                              _seq_norm_udf, dot, norm)
+
+    df = spark.createDataFrame([(i, a, b) for i, (a, b) in enumerate(pairs)],
+                               "id int, a array<double>, b array<double>")
+    a, b = F.col("a"), F.col("b")
+    rows = df.select(
+        "id", _seq_norm_udf()(a, _has_null(a)).alias("un"),
+        norm(a).alias("jn"),
+        _seq_dot_udf()(a, b, _has_null(a) | _has_null(b)).alias("ud"),
+        dot(a, b).alias("jd")).collect()
+    for r in rows:
+        # repr tells NaN, NULL (None) and -0.0 apart
+        assert repr(r.un) == repr(r.jn), (pairs[r.id], r.un, r.jn)
+        assert repr(r.ud) == repr(r.jd), (pairs[r.id], r.ud, r.jd)

@@ -263,11 +263,12 @@ def test_degenerate_cell_cap_is_loud_and_bounded(spark):
     assert n_full >= n_capped
 
 
-def test_probe_cells_paths_agree_and_append_matches_fit(spark):
-    """r9: probe_cells' two physical paths (JVM crossJoin at small
-    centroid tables, Arrow exact-BLAS at scale) must pick identical
-    cells; and ivf_append must assign a new vector exactly where the
-    fit-time rule would."""
+def test_probe_cells_is_stable_argsort_and_append_matches_fit(spark):
+    """probe_cells picks each row's nprobe nearest cells by exact
+    integer distance, ties toward the lower cell id — the stable
+    argsort of the exact distances (numpy replay); and ivf_append must
+    assign a new vector exactly where the fit-time rule would."""
+    import numpy as np
     import pyspark.sql.functions as F
 
     from orange3_spark.ml.cluster import quantize_array
@@ -282,19 +283,23 @@ def test_probe_cells_paths_agree_and_append_matches_fit(spark):
     assigned, cents = ivf_fit(base, n_cells=6, n_iter=2)
 
     q = new.select("vec_id", quantize_array(F.col("embedding")).alias("qv"))
-    a = probe_cells(q, cents, 2, id_col="vec_id",
-                    jvm_max_cells_dim=10 ** 9)     # force JVM path
-    b = probe_cells(q, cents, 2, id_col="vec_id",
-                    jvm_max_cells_dim=0)           # force Arrow path
-    pa = sorted((r["vec_id"], r["cluster"]) for r in a.collect())
-    pb = sorted((r["vec_id"], r["cluster"]) for r in b.collect())
-    assert pa == pb and len(pa) == new.count() * 2
+    got = sorted((r["vec_id"], r["cluster"])
+                 for r in probe_cells(q, cents, 2).collect())
+    table = {r["cluster"]: r["cvec"] for r in cents.collect()}
+    ids = sorted(table)
+    M = np.asarray([table[c] for c in ids], dtype=np.int64)
+    want = []
+    for r in q.collect():
+        d = ((np.asarray(r["qv"], dtype=np.int64)[None, :] - M) ** 2).sum(1)
+        want += [(r["vec_id"], ids[i])
+                 for i in np.argsort(d, kind="stable")[:2]]
+    assert got == sorted(want) and len(got) == new.count() * 2
 
-    # append: nearest single cell == the nprobe=1 probe of either path
+    # append: nearest single cell == the nprobe=1 probe
     combined = ivf_append(assigned, cents, new)
     got = {r["vec_id"]: r["cluster"]
            for r in combined.join(new.select("vec_id"), "vec_id").collect()}
-    one = probe_cells(q, cents, 1, id_col="vec_id")
+    one = probe_cells(q, cents, 1)
     want = {r["vec_id"]: r["cluster"] for r in one.collect()}
     assert got == want
     assert combined.count() == 60
